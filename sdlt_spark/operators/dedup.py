@@ -1611,9 +1611,10 @@ def ngram_jaccard_pairs(
 _CC_DRIVER_EDGES = int(os.environ.get("SDLT_CC_DRIVER_EDGES", str(100_000)))
 
 
-def _driver_orderable(dtype) -> bool:
+def _driver_orderable(schema) -> bool:
     """True when Python's ``<`` over collected values provably matches
-    Spark's ``min``/``least`` ordering for ``dtype``: integral types
+    Spark's ``min``/``least`` ordering for EVERY column of ``schema`` (the
+    edge frame's two endpoint columns): integral types
     (identical integer order), strings (Python compares by code point;
     Spark's UTF-8 byte order preserves code points), and booleans. Floats
     are excluded (NaN ordering diverges: Spark sorts NaN greatest, Python
@@ -1622,17 +1623,8 @@ def _driver_orderable(dtype) -> bool:
     agreement (ADVICE round 13)."""
     from pyspark.sql import types as T
 
-    return isinstance(
-        dtype,
-        (
-            T.ByteType,
-            T.ShortType,
-            T.IntegerType,
-            T.LongType,
-            T.StringType,
-            T.BooleanType,
-        ),
-    )
+    ok = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType, T.BooleanType)
+    return all(isinstance(f.dataType, ok) for f in schema)
 
 
 def _driver_components(e2: DataFrame) -> DataFrame:
@@ -1783,7 +1775,7 @@ def dedup_clusters(
         prev, e2, n_cur = n_cur, nxt, n_next
         if n_next == 0:
             break
-        if n_next <= _CC_DRIVER_EDGES and _driver_orderable(e2.schema[0].dataType):
+        if n_next <= _CC_DRIVER_EDGES and _driver_orderable(e2.schema):
             # The contracted remnant fits the driver's control plane (the
             # gate bounds the collect: default 100k edges = a few MB, the
             # same cost class as the k-means centroid collects). Every
@@ -1796,8 +1788,8 @@ def dedup_clusters(
             # whose contracted remnant stays above the gate keep the
             # distributed rounds unchanged. Id types whose Python `<`
             # could diverge from Spark's min/least ordering (floats with
-            # NaN, binary, exotic orderables) skip the driver finish and
-            # take the distributed rounds instead (ADVICE round 13).
+            # NaN, binary, exotic orderables) — on EITHER edge column —
+            # skip the driver finish and take the distributed rounds.
             driver_labels = _driver_components(e2)
             break
         if prev is not None and n_next * 2 > prev:

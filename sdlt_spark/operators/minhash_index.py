@@ -84,20 +84,6 @@ _INDEX_FILE_BYTES = int(os.environ.get("SDLT_INDEX_FILE_BYTES", str(128 << 20)))
 _PRUNE_MIN_BYTES = int(os.environ.get("SDLT_MINHASH_PRUNE_MIN_BYTES", str(256 << 20)))
 
 
-def _index_data_bytes(t) -> int:
-    """Bytes of the index's live data files, from driver-side commit
-    metadata + file stats — no Spark job; short-circuits at the gate
-    threshold (the caller only needs the boolean, so O(files) syscalls
-    are not paid past the crossing point). Drives the fetch-prune gate."""
-    data, _ = t._split_live(t._live_files())
-    total = 0
-    for f in data:
-        total += os.path.getsize(os.path.join(t.path, f))
-        if total >= _PRUNE_MIN_BYTES:
-            break
-    return total
-
-
 def _size_coalesced(df):
     """Coalesce ``df`` (persisted + materialized, so Catalyst stats are the
     TRUE cached size) to ceil(size / _INDEX_FILE_BYTES) partitions for
@@ -143,8 +129,10 @@ def _submit_deferred(bg_fn, caches, fg_fn) -> Future:
     leg ever races a cache teardown. The caller awaits the Future after
     submitting the NEXT lifecycle step's jobs — that is the overlap. If
     the foreground leg raises, the exception propagates immediately; the
-    background leg still completes (and cleans up) on its own thread, its
-    outcome available on the returned Future."""
+    background leg still completes (and cleans up) on its own thread, and
+    its Future rides on the exception as ``pending_verify``, so a
+    background failure (e.g. ``PairBudgetExceeded``) can still be
+    awaited."""
     fg_done = threading.Event()
 
     def _bg():
@@ -160,6 +148,9 @@ def _submit_deferred(bg_fn, caches, fg_fn) -> Future:
     pool.shutdown(wait=False)
     try:
         fg_fn()
+    except BaseException as exc:
+        exc.pending_verify = fut
+        raise
     finally:
         fg_done.set()
     return fut
@@ -522,7 +513,8 @@ def minhash_refresh(
         # live index rows: superseded/deleted ids leave the probe so an
         # updated doc can't match its own old signature (stale is small ->
         # broadcast anti join; the index is scanned, never shuffled)
-        index_live = t.read().join(F.broadcast(stale), id_col, "left_anti")
+        index_snap = t._snapshot()
+        index_live = t._scan(index_snap).join(F.broadcast(stale), id_col, "left_anti")
 
         bexprs = _band_exprs(num_hashes, bands)
         band_arr = F.posexplode(F.array(*bexprs))
@@ -605,7 +597,7 @@ def minhash_refresh(
             # Identical pairs either way, plan picked by size
             # (see _PRUNE_MIN_BYTES).
             fetch = batch.unionByName(index_live)
-            if _index_data_bytes(t) >= _PRUNE_MIN_BYTES:
+            if t._live_bytes_at_least(_PRUNE_MIN_BYTES, index_snap.files):
                 cand = cand.persist()
                 persisted.append(cand)
                 cids = cand.select(
@@ -668,7 +660,7 @@ def minhash_refresh(
         # verify consumes the same caches plus the PRE-merge index files —
         # which the copy-on-write merge never deletes (only vacuum does),
         # and the verify's index scan was pinned to the old version's file
-        # list at t.read() time. So they run as CONCURRENT Spark jobs
+        # list by index_snap. So they run as CONCURRENT Spark jobs
         # (guide §2.6), the merge's commit machinery (zone-map agg, touched
         # scan, data + CDC writes) hiding under the verify's candidate
         # compute.

@@ -622,11 +622,11 @@ def ivf_search(
     qv = np.asarray(query, dtype=np.float64)
     qv = qv / max(np.linalg.norm(qv), 1e-12)
     probe = sorted(np.argsort(-(cents @ qv))[:nprobe].tolist())
-    live = t._live_files(version=v)
+    snap = t._snapshot(version=v)
     files = sorted(
-        {f for c in probe for f in t._prune_by_range(live, "__cell", c, c)}
+        {f for c in probe for f in t._prune_by_range(snap.files, "__cell", c, c)}
     )
-    probed = t._read_files(files, version=v).filter(F.col("__cell").isin(*probe))
+    probed = t._read_files(files, snap.schema).filter(F.col("__cell").isin(*probe))
     return cosine_topk(probed, vec_col, id_col, query, k)
 
 

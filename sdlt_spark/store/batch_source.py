@@ -413,14 +413,10 @@ class VintageSnapshotDataSource(DataSource):
 
     def schema(self) -> StructType:
         path, version, ts = _parse_options(dict(self.options))
-        t = _table(path)
-        if ts is not None and version is None:
-            # timestampAsOf must resolve the schema IN EFFECT at that
-            # time — _schema_at(None) would pad old files to the LATEST
-            # schema, showing columns that did not exist yet (diverging
-            # from VintageTable.read(timestamp=...))
-            version = t._version_at(ts)
-        base = t._schema_at(version=version)
+        # timestampAsOf resolves the schema IN EFFECT at that time (the
+        # snapshot's), never the head's — the head would show columns that
+        # did not exist yet (diverging from VintageTable.read(timestamp=...))
+        base = _table(path)._snapshot(version, ts).schema
         # every column nullable: padded evolution rows carry NULLs
         return StructType([StructField(f.name, f.dataType, True) for f in base.fields])
 

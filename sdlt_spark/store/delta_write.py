@@ -1052,8 +1052,8 @@ def export_vintage_to_delta(
         existing_dvs = {}
         existing_config = {}
 
-    live = vintage._live_files()
-    data, dvs = vintage._split_live(live)
+    vsnap = vintage._snapshot()
+    data, dvs = vintage._split_live(vsnap.files)
     fparts = vintage._file_partitions()
     part_cols: list[str] = []
     mat_rels: list[str] = []
@@ -1182,15 +1182,9 @@ def export_vintage_to_delta(
         tok_by_src = {
             vintage._abs(rel): _token(rel) for rel in covered_rels
         }
-        keyed = vintage._with_dv_key(vintage._read_files(covered_rels))
-        dv_df = spark.read.parquet(
-            *[os.path.join(vintage.path, f) for f in dvs]
-        ).select("file", "pos")
-        surv = keyed.join(
-            dv_df,
-            (keyed["__dv_file"] == dv_df["file"])
-            & (keyed["__dv_pos"] == dv_df["pos"]),
-            "left_anti",
+        surv = vintage._drop_dv_rows(
+            vintage._with_dv_key(vintage._read_files(covered_rels, vsnap.schema)),
+            dvs,
         )
         # __dv_file is table-relative (absolute for clone-translated refs);
         # canonicalize to absolute to hit tok_by_src
@@ -1258,7 +1252,7 @@ def export_vintage_to_delta(
 
         spark = vintage.spark
         tok_by_abs = {vintage._abs(rel): _token(rel) for rel in mat_rels}
-        mdf = vintage._read_files(mat_rels)
+        mdf = vintage._read_files(mat_rels, vsnap.schema)
         mapping = F.create_map(
             *[F.lit(x) for kv in tok_by_abs.items() for x in kv]
         )
@@ -1269,16 +1263,7 @@ def export_vintage_to_delta(
             # derive the token from the canonicalized __dv_file — after a
             # join, _metadata is no longer referencable, and __dv_file is
             # exactly the per-row file identity the DV key carries
-            keyed = vintage._with_dv_key(mdf)
-            dv_df = spark.read.parquet(
-                *[os.path.join(vintage.path, f) for f in mat_dvs]
-            ).select("file", "pos")
-            surv = keyed.join(
-                dv_df,
-                (keyed["__dv_file"] == dv_df["file"])
-                & (keyed["__dv_pos"] == dv_df["pos"]),
-                "left_anti",
-            )
+            surv = vintage._drop_dv_rows(vintage._with_dv_key(mdf), mat_dvs)
             root_ = vintage.path.rstrip("/") + "/"
             abs_src = F.when(
                 F.col("__dv_file").startswith("/"), F.col("__dv_file")
@@ -1378,7 +1363,7 @@ def export_vintage_to_delta(
         for rel in sorted(set(existing) - set(wanted))
     ]
 
-    schema_json = vintage._schema_at().json()
+    schema_json = vsnap.schema.json()
     # vintage CHECK constraints publish as delta.constraints.* (the inverse
     # of what import_delta_to_vintage reads back) so stock Delta WRITERS
     # keep enforcing the source's invariants on the export

@@ -365,6 +365,43 @@ class _Commit:
         )
 
 
+@dataclass(frozen=True)
+class _Snapshot:
+    """One resolved table state: its version, its live files (data files
+    and deletion-vector sidecars) and the schema the log recorded for it.
+    Scans take their schema from here, so planning one opens no file."""
+
+    version: int
+    files: list[str]
+    schema_json: str | None
+
+    @property
+    def schema(self):
+        return _schema_of(self.schema_json, self.version)
+
+
+def _schema_of(schema_json: str | None, version: int):
+    from pyspark.sql.types import StructType
+
+    if schema_json is None:
+        raise FileNotFoundError(f"no schema recorded at version {version}")
+    return StructType.fromJson(json.loads(schema_json))
+
+
+def _pad_to(frame: DataFrame, fields) -> DataFrame:
+    """Project onto ``fields`` in their order; columns the frame lacks
+    (evolved after its rows were written) come in as typed nulls."""
+    have = set(frame.columns)
+    return frame.select(
+        *[f.name if f.name in have else F.lit(None).cast(f.dataType).alias(f.name) for f in fields]
+    )
+
+
+# Deletion-vector sidecar rows: a live data file and a row position in it
+# (``_metadata.row_index``). Fixed, so DV scans never infer a schema.
+_DV_SCHEMA = "file STRING, pos LONG"
+
+
 class VintageTable:
     """A versioned parquet table with Delta-like mutation semantics."""
 
@@ -473,48 +510,55 @@ class VintageTable:
         ``_last_checkpoint`` mechanism. Written automatically every
         ``_CHECKPOINT_EVERY`` commits; safe to call any time. Returns the
         checkpointed version."""
-        v = self.latest_version()
-        entry = self._commits(after=v - 1)[0]
+        snap = self._snapshot()
+        entry = self._commits(after=snap.version - 1, up_to=snap.version)[0]
         payload = {
-            "version": v,
+            "version": snap.version,
             "timestamp": entry.timestamp,
-            "live": self._live_files(version=v),
-            "schemaJson": self._schema_at(version=v).json(),
+            "live": snap.files,
+            "schemaJson": snap.schema_json,
         }
-        final = os.path.join(self._log_path(), f"{v:08d}.checkpoint.json")
+        final = os.path.join(self._log_path(), f"{snap.version:08d}.checkpoint.json")
         tmp = final + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(payload, f)
         os.rename(tmp, final)  # atomic publish
-        return v
+        return snap.version
 
-    def _live_files(self, version: int | None = None, timestamp: float | None = None) -> list[str]:
+    def _snapshot(
+        self, version: int | None = None, timestamp: float | None = None
+    ) -> _Snapshot:
+        """The table state at ``version`` or ``timestamp`` (the head when
+        both are None), from ONE replay of the log past the newest usable
+        checkpoint. A timestamp resolves to the newest commit at or before
+        it, so a timestamp read's files and schema come from the same
+        version. Each op takes one snapshot and derives its file list,
+        schema and version from it."""
         ckpt = self._load_checkpoint(version=version, timestamp=timestamp)
-        commits = self._commits(after=ckpt["version"] if ckpt else -1)
+        commits = self._commits(after=ckpt["version"] if ckpt else -1, up_to=version)
         if not commits and ckpt is None:
             raise FileNotFoundError(f"no vintage table at {self.path}")
         if timestamp is not None:
-            eligible = [c for c in commits if c.timestamp <= timestamp]
+            eligible = [c.version for c in commits if c.timestamp <= timestamp]
             if not eligible and ckpt is None:
                 raise ValueError(f"no version at or before timestamp {timestamp}")
-            version = eligible[-1].version if eligible else ckpt["version"]
+            last = eligible[-1] if eligible else ckpt["version"]
+            commits = [c for c in commits if c.version <= last]
         live: set[str] = set(ckpt["live"]) if ckpt else set()
+        schema_json = ckpt["schemaJson"] if ckpt else None
+        resolved = ckpt["version"] if ckpt else -1
         for c in commits:
-            if version is not None and c.version > version:
-                break
             live.difference_update(c.remove)
             live.update(c.add)
-        return sorted(live)
+            schema_json = c.schema_json or schema_json
+            resolved = c.version
+        return _Snapshot(resolved, sorted(live), schema_json)
 
-    def _version_at(self, timestamp: float) -> int:
-        """The version in effect at ``timestamp`` (same resolution rule as
-        ``_live_files``): the newest commit at or before it."""
-        ckpt = self._load_checkpoint(timestamp=timestamp)
-        commits = self._commits(after=ckpt["version"] if ckpt else -1)
-        eligible = [c for c in commits if c.timestamp <= timestamp]
-        if not eligible and ckpt is None:
-            raise ValueError(f"no version at or before timestamp {timestamp}")
-        return eligible[-1].version if eligible else ckpt["version"]
+    def _live_files(self, version: int | None = None, timestamp: float | None = None) -> list[str]:
+        return self._snapshot(version, timestamp).files
+
+    def _schema_at(self, version: int | None = None):
+        return self._snapshot(version).schema
 
     def _next_version(self) -> int:
         versions = self._commit_versions()
@@ -668,8 +712,8 @@ class VintageTable:
         ]
         self._op_files.extend(files)
         if not files:
-            # a zero-partition change frame wrote no part files; recording
-            # the dir would make CDC readers choke on schema inference
+            # a zero-partition change frame wrote no part files: there is
+            # no change data to point CDC readers at
             import shutil
 
             shutil.rmtree(abs_dir, ignore_errors=True)
@@ -787,7 +831,7 @@ class VintageTable:
             return {}
 
     def _attach_file_partitions(
-        self, df: DataFrame, relevant: dict, version: int | None
+        self, df: DataFrame, relevant: dict, schema
     ) -> DataFrame:
         """Re-attach log-carried constant columns to a raw-file scan via a
         broadcast (absolute file -> values) map join — ONE scan node and
@@ -795,10 +839,10 @@ class VintageTable:
         source table had (the same mechanism DeltaTableReader uses).
         Values are stored as Delta's partition-value strings and cast
         through the table schema's types; files that already materialize
-        a column inline (post-import rewrites) win via coalesce."""
+        a column inline (post-import rewrites) win via coalesce. The scan
+        carries the snapshot schema, so the columns keep its order."""
         from pyspark.sql.types import StringType, StructField, StructType
 
-        schema = self._schema_at(version)
         types = {f.name: f.dataType for f in schema.fields}
         cols = [
             f.name
@@ -834,16 +878,8 @@ class VintageTable:
             F.broadcast(pmap), "__fp_path", "left"
         )
         for c in cols:
-            attached = F.col(f"__fp_{c}")
-            df = df.withColumn(
-                c, F.coalesce(F.col(c), attached) if c in df.columns else attached
-            )
-        df = df.drop("__fp_path", *[f"__fp_{c}" for c in cols])
-        # present the declared column order when the sets line up (imported
-        # tables); leave evolved/extra columns where mergeSchema put them
-        if set(df.columns) - {"_metadata"} == {f.name for f in schema.fields}:
-            df = df.select(*[f.name for f in schema.fields], "_metadata")
-        return df
+            df = df.withColumn(c, F.coalesce(F.col(c), F.col(f"__fp_{c}")))
+        return df.drop("__fp_path", *[f"__fp_{c}" for c in cols])
 
     def _prune_by_range(self, files: list[str], col: str, lo, hi) -> list[str]:
         """Keep only files whose [min, max] zone for ``col`` overlaps
@@ -871,32 +907,23 @@ class VintageTable:
                 out.append(f)
         return out
 
-    def _schema_at(self, version: int | None = None):
-        from pyspark.sql.types import StructType
-
-        ckpt = self._load_checkpoint(version=version)
-        last = ckpt["schemaJson"] if ckpt else None
-        for c in self._commits(after=ckpt["version"] if ckpt else -1):
-            if version is not None and c.version > version:
-                break
-            if c.schema_json:
-                last = c.schema_json
-        if last is None:
-            raise FileNotFoundError(f"no schema recorded for table at {self.path}")
-        return StructType.fromJson(json.loads(last))
-
-    def _read_files(self, files: list[str], version: int | None = None) -> DataFrame:
+    def _read_files(self, files: list[str], schema) -> DataFrame:
+        """Scan table-relative ``files`` with ``schema``, the snapshot's
+        log-recorded schema, the way DeltaTableReader scans: Spark plans
+        the scan without a footer-reading job, and files written before a
+        schema evolution read the newer columns as typed nulls (Delta's
+        semantics)."""
         if not files:
-            return self.spark.createDataFrame([], self._schema_at(version))
-        paths = [os.path.join(self.path, f) for f in files]
-        # mergeSchema tolerates schema evolution across commits (README.md:330)
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
+            return self.spark.createDataFrame([], schema)
+        df = self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.path, f) for f in files]
+        )
         pmap = self._file_partitions()
         if pmap:
             fset = set(files)
             relevant = {rel: vals for rel, vals in pmap.items() if rel in fset}
             if relevant:
-                df = self._attach_file_partitions(df, relevant, version)
+                df = self._attach_file_partitions(df, relevant, schema)
         return df
 
     @staticmethod
@@ -935,31 +962,25 @@ class VintageTable:
         so paths compare equal however they were derived)."""
         return os.path.normpath(os.path.join(self.path, rel))
 
-    def _live_data_bytes(
-        self, stop_at: int | None = None, live: list[str] | None = None
-    ) -> int:
-        """Total bytes of the live data files, from driver-side file stats
-        (no Spark job). Feeds size gates that pick a plan shape — e.g.
-        whether a merge's zone-map pruning aggregate can pay for itself.
-        Unstat-able files (remote store) count as large so gates fail
-        toward the scale-safe plan.
-
-        ``stop_at`` short-circuits once the running total crosses it: gate
-        callers only need the boolean, and at the 100 TB / O(100k-files)
-        design point a handful of stats answers it instead of O(files)
-        driver syscalls per merge (ADVICE round 13). ``live`` lets a
-        caller that already replayed the commit log pass its file list in
-        rather than paying a second ``_live_files()`` replay."""
+    def _live_bytes_at_least(self, threshold: int, live: list[str] | None = None) -> bool:
+        """Whether the live data files hold at least ``threshold`` bytes,
+        from driver-side file sizes (no Spark job): the one estimator
+        behind the size gates that pick a plan shape (a merge's zone-map
+        pruning aggregate, the MinHash refresh's candidate-fetch prune).
+        It stops at the crossing, so at the 100 TB / O(100k-files) design
+        point a handful of stats answer it. An unstat-able file (remote
+        store) counts as large, so gates fail toward the scale-safe plan.
+        ``live`` is the caller's snapshot file list (no second replay)."""
         data, _ = self._split_live(self._live_files() if live is None else live)
         total = 0
         for f in data:
+            if total >= threshold:
+                return True
             try:
                 total += os.path.getsize(self._abs(f))
             except OSError:
-                return 1 << 60
-            if stop_at is not None and total >= stop_at:
-                return total
-        return total
+                return True
+        return total >= threshold
 
     def _dv_coverage(self, dv_files: list[str]) -> dict[str, set[str]]:
         """Absolute paths of the data files each deletion-vector sidecar
@@ -1009,22 +1030,35 @@ class VintageTable:
             "__dv_pos", F.col("_metadata.row_index")
         )
 
-    def _apply_dvs(self, df: DataFrame, dv_files: list[str]) -> DataFrame:
-        """Filter out rows named by the given deletion-vector files. The DV
-        side is O(deleted rows) — typically tiny next to the table — and
-        carries 16-byte pairs; no broadcast hint (AQE broadcasts iff it
-        fits). No-op (and no plan change) when no DVs are live."""
-        if not dv_files:
-            return df
-        dv = self.spark.read.parquet(
+    def _read_dvs(self, dv_files: list[str]) -> DataFrame:
+        """The (file, pos) rows of deletion-vector sidecars, scanned with
+        their fixed schema."""
+        return self.spark.read.schema(_DV_SCHEMA).parquet(
             *[os.path.join(self.path, f) for f in dv_files]
-        ).select("file", "pos")
-        keyed = self._with_dv_key(df)
+        )
+
+    def _drop_dv_rows(self, keyed: DataFrame, dv_files: list[str]) -> DataFrame:
+        """Anti-join a DV-keyed frame (:meth:`_with_dv_key`) against the
+        given sidecars. The DV side is O(deleted rows) — typically tiny
+        next to the table — and carries 16-byte pairs; no broadcast hint
+        (AQE broadcasts iff it fits)."""
+        if not dv_files:
+            return keyed
+        dv = self._read_dvs(dv_files)
         return keyed.join(
             dv,
             (keyed["__dv_file"] == dv["file"]) & (keyed["__dv_pos"] == dv["pos"]),
             "left_anti",
-        ).drop("__dv_file", "__dv_pos")
+        )
+
+    def _apply_dvs(self, df: DataFrame, dv_files: list[str]) -> DataFrame:
+        """Filter out rows named by the given deletion-vector files. No-op
+        (and no plan change) when no DVs are live."""
+        if not dv_files:
+            return df
+        return self._drop_dv_rows(self._with_dv_key(df), dv_files).drop(
+            "__dv_file", "__dv_pos"
+        )
 
     def _write_dv_files(self, dv_rows: DataFrame) -> list[str]:
         """Persist (file, pos) deletion-vector rows under dv/ and return
@@ -1058,26 +1092,18 @@ class VintageTable:
         deletion-vector write path. O(matched rows) written, zero data
         files touched; readers apply the DV as an anti-join until a
         mutation or compact() materializes it."""
-        live = self._live_files()
-        data, dvs = self._split_live(live)
+        snap = self._snapshot()
+        data, dvs = self._split_live(snap.files)
         cond = F.expr(condition)
         if not data:
             return self._commit(
                 "DELETE", {"predicate": condition, "deletionVectors": "true"}, [], []
             )
         # already-deleted rows are excluded first, so re-deleting is a no-op
-        snap = self._with_dv_key(self._read_files(data))
-        if dvs:
-            prior = self.spark.read.parquet(
-                *[os.path.join(self.path, f) for f in dvs]
-            ).select("file", "pos")
-            snap = snap.join(
-                prior,
-                (snap["__dv_file"] == prior["file"])
-                & (snap["__dv_pos"] == prior["pos"]),
-                "left_anti",
-            )
-        matched = snap.filter(cond)
+        rows = self._drop_dv_rows(
+            self._with_dv_key(self._read_files(data, snap.schema)), dvs
+        )
+        matched = rows.filter(cond)
         if self.change_feed:
             matched = matched.localCheckpoint(eager=False)
         add = self._write_dv_files(
@@ -1103,29 +1129,41 @@ class VintageTable:
         their deleted rows dropped, and retire the DV sidecars — Delta's
         REORG TABLE APPLY (PURGE). Logical content is unchanged, so the
         commit is dataChange=false (CDC readers skip it). Returns the new
-        version, or None when no DVs are live. Copy-on-write mutations call
-        this implicitly (before writing any files of their own, which is
-        what makes the nested ``_retry_conflicts`` safe) so their
-        file-level row handling never resurrects DV-deleted rows; cost is
-        O(covered files), not O(table)."""
-        live = self._live_files()
-        data, dvs = self._split_live(live)
+        version, or None when no DVs are live. Copy-on-write mutations do
+        this implicitly (:meth:`_fold_dvs`, before writing any files of
+        their own) so their file-level row handling never resurrects
+        DV-deleted rows; cost is O(covered files), not O(table)."""
+        snap = self._snapshot()
+        folded = self._fold_dvs(snap)
+        return None if folded is snap else folded.version
+
+    def _fold_dvs(self, snap: _Snapshot) -> _Snapshot:
+        """:meth:`materialize_deletion_vectors` on a snapshot the caller
+        already holds; returns the snapshot after the fold (``snap``
+        itself when no DVs are live), so a copy-on-write mutation replays
+        the log once. Runs before the caller writes files of its own."""
+        data, dvs = self._split_live(snap.files)
         if not dvs:
-            return None
+            return snap
         covered_abs = set().union(*self._dv_coverage(dvs).values())
         covered = sorted(f for f in data if self._abs(f) in covered_abs)
         add = (
-            self._write_files(self._apply_dvs(self._read_files(covered), dvs))
+            self._write_files(
+                self._apply_dvs(self._read_files(covered, snap.schema), dvs)
+            )
             if covered
             else []  # DVs referencing no live file (e.g. all-empty) just retire
         )
-        return self._commit(
+        remove = covered + dvs
+        version = self._commit(
             "WRITE",
             {"mode": "Overwrite", "dataChange": "false", "materializeDeletionVectors": "true"},
             add,
-            covered + dvs,
+            remove,
             data_change=False,
         )
+        live = set(snap.files).difference(remove) | set(add)
+        return _Snapshot(version, sorted(live), snap.schema_json)
 
     # ---------------------------------------------------------------- reads
 
@@ -1135,14 +1173,33 @@ class VintageTable:
         """Snapshot read; ``version``/``timestamp`` give time travel
         (README.md:169 ``versionAsOf`` / README.md:166 ``timestampAsOf``).
         Live deletion vectors (``delete(mode='dv')``) are applied as an
-        anti-join — zero plan change when none exist."""
-        files = self._live_files(version=version, timestamp=timestamp)
-        data, dvs = self._split_live(files)
-        df = self._read_files(data, version=version)
+        anti-join — zero plan change when none exist. No Spark job runs
+        before the caller's action: the snapshot's files and schema come
+        from the commit log."""
+        return self._scan(self._snapshot(version, timestamp))
+
+    def _scan(self, snap: _Snapshot, data: list[str] | None = None) -> DataFrame:
+        """Rows of ``snap`` — of its data files ``data`` when given (a
+        zone-map-pruned subset) — with its deletion vectors applied. DV
+        entries for files outside ``data`` simply never match."""
+        all_data, dvs = self._split_live(snap.files)
+        data = all_data if data is None else data
+        df = self._read_files(data, snap.schema)
         # empty-table reads have no _metadata columns to key on (and no
         # rows a DV could remove). The drop sheds the materialized helper
         # column a per-file-constant attach leaves behind (no-op elsewhere).
         return (self._apply_dvs(df, dvs) if data else df).drop("_metadata")
+
+    def _files_matching(self, snap: _Snapshot, cond) -> list[str]:
+        """The snapshot's files holding a row where ``cond`` is true — the
+        copy-on-write touched set: one Spark job reading only the
+        condition's columns plus file metadata. ``snap`` carries no DVs
+        (callers fold them first)."""
+        if not snap.files:
+            return []
+        scan = self._with_file(self._read_files(snap.files, snap.schema))
+        uris = scan.filter(cond).select("__file").distinct().collect()
+        return sorted({self._rel(r["__file"]) for r in uris})
 
     def read_where(self, col: str, lo=None, hi=None, version: int | None = None) -> DataFrame:
         """Data-skipping range read (Delta's read-path file skipping): only
@@ -1155,18 +1212,15 @@ class VintageTable:
         reorganized by ``compact(sort_by/zorder_by)`` a narrow range
         touches O(matching) files regardless of table size — the property
         that makes point-ish reads on a 100 TB table not be table scans."""
-        data, dvs = self._split_live(self._live_files(version=version))
-        files = self._prune_by_range(data, col, lo, hi)
-        df = self._read_files(files, version=version)
-        # DV entries for pruned-out files simply never match the anti-join
-        if files:
-            df = self._apply_dvs(df, dvs)
+        snap = self._snapshot(version)
+        data, _ = self._split_live(snap.files)
+        df = self._scan(snap, self._prune_by_range(data, col, lo, hi))
         c = F.col(col)
         if lo is not None:
             df = df.filter(c >= F.lit(lo))
         if hi is not None:
             df = df.filter(c <= F.lit(hi))
-        return df.drop("_metadata")
+        return df
 
     def history(self) -> DataFrame:
         """Version log, newest first (README.md:305-319)."""
@@ -1314,7 +1368,7 @@ class VintageTable:
             # Delta errors on schema-mismatched appends (README.md:327);
             # overwrite replaces the schema, append must conform — names AND
             # types (a name-only check would let a string o_totalprice land
-            # and corrupt every later mergeSchema read).
+            # in files every later read scans with the table's double).
             current = {f.name: f.dataType.simpleString() for f in self._schema_at().fields}
             incoming = {f.name: f.dataType.simpleString() for f in df.schema.fields}
             if incoming != current:
@@ -1357,7 +1411,8 @@ class VintageTable:
                 df, mode="overwrite", cluster_by=cluster_by,
                 num_files=num_files, txn_id=txn_id,
             )
-        current = {f.name: f.dataType.simpleString() for f in self._schema_at().fields}
+        snap = self._snapshot()
+        current = {f.name: f.dataType.simpleString() for f in snap.schema.fields}
         incoming = {f.name: f.dataType.simpleString() for f in df.schema.fields}
         if incoming != current:
             raise ValueError(
@@ -1374,16 +1429,16 @@ class VintageTable:
                 *cluster_by
             )
         cond = F.expr(predicate)
-        # DVs fold FIRST — before this op stages any files of its own:
-        # materialize's nested @_retry_conflicts resets _op_files on
-        # entry, so files staged earlier would leak unreferenced if a
-        # later step failed (the delete()/update() ordering discipline)
-        self.materialize_deletion_vectors()
+        # DVs fold FIRST — before this op stages any files of its own, so
+        # a failed fold never strands staged files (the delete()/update()
+        # ordering discipline)
+        snap = self._fold_dvs(snap)
+        schema = snap.schema
         # stage the incoming rows, then validate from the staged files —
         # Delta raises when a row falls outside the replaced region
         add_new = self._write_files(df)
         if add_new:
-            staged = self._read_files(add_new)
+            staged = self._read_files(add_new, schema)
             n_bad = staged.filter(~F.coalesce(cond, F.lit(False))).count()
             if n_bad:
                 raise ValueError(
@@ -1391,32 +1446,18 @@ class VintageTable:
                     f"the predicate {predicate!r}; writing them would "
                     "corrupt rows outside the replaced region"
                 )
-        live = self._live_files()
-        touched = (
-            sorted(
-                {
-                    self._rel(r["__file"])
-                    for r in self._with_file(self._read_files(live))
-                    .filter(cond)
-                    .select("__file")
-                    .distinct()
-                    .collect()
-                }
-            )
-            if live
-            else []
-        )
+        touched = self._files_matching(snap, cond)
         add_kept: list[str] = []
         change_dir = None
         if touched:
-            rows = self._read_files(touched)
+            rows = self._read_files(touched, schema)
             survivors = rows.filter(~F.coalesce(cond, F.lit(False)))
             if self.change_feed:
                 change_dir = self._write_change_data(
                     rows.filter(cond)
                     .withColumn("_change_type", F.lit("delete"))
                     .unionByName(
-                        self._read_files(add_new).withColumn(
+                        self._read_files(add_new, schema).withColumn(
                             "_change_type", F.lit("insert")
                         )
                     )
@@ -1428,7 +1469,7 @@ class VintageTable:
             add_kept = self._write_files(survivors)
         elif self.change_feed and add_new:
             change_dir = self._write_change_data(
-                self._read_files(add_new).withColumn(
+                self._read_files(add_new, schema).withColumn(
                     "_change_type", F.lit("insert")
                 )
             )
@@ -1439,7 +1480,7 @@ class VintageTable:
             params["changeData"] = change_dir
         return self._commit(
             "WRITE", params, add_new + add_kept, touched,
-            schema_json=self._schema_at().json(),
+            schema_json=snap.schema_json,
         )
 
     def last_txn_id(self, app: str | None = None) -> str | None:
@@ -1580,15 +1621,15 @@ class VintageTable:
             src = src.localCheckpoint(eager=True)
         # merge reasons about raw file contents (zone-map skip + rewrite),
         # so outstanding deletion vectors are folded in first
-        self.materialize_deletion_vectors()
-        live = self._live_files()
+        exists = self.exists()
+        snap = self._fold_dvs(self._snapshot()) if exists else None
+        live = snap.files if exists else []
         key0 = key_cols[0]
         validate = on_duplicate_source == "error" and order_col is None
         rng = None
         if validate or (
             live
-            and self._live_data_bytes(stop_at=_MERGE_PRUNE_MIN_BYTES, live=live)
-            >= _MERGE_PRUNE_MIN_BYTES
+            and self._live_bytes_at_least(_MERGE_PRUNE_MIN_BYTES, live)
         ):
             # One tiny agg job does double duty: the key range feeds
             # zone-map file skipping, the exact distinct count detects
@@ -1624,13 +1665,13 @@ class VintageTable:
                 if isinstance(lo, (int, float, str)):
                     candidates = self._prune_by_range(live, key0, lo, hi)
             if candidates:
-                snap = self._with_file(self._read_files(candidates))
+                scan = self._with_file(self._read_files(candidates, snap.schema))
                 # Which files contain rows whose key appears in the source?
                 # Reads only key columns + file metadata; Catalyst/AQE picks
                 # broadcast when the source is small.
                 touched_uris = [
                     r["__file"]
-                    for r in snap.select("__file", *key_cols)
+                    for r in scan.select("__file", *key_cols)
                     .join(src.select(*key_cols), key_cols, "left_semi")
                     .select("__file")
                     .distinct()
@@ -1652,7 +1693,7 @@ class VintageTable:
             # only sound for the matched side). Catalyst prunes the read to
             # the key + condition columns; a selective condition string can
             # additionally be zone-map-pruned by callers via delete().
-            snap_all = self._with_file(self._read_files(live))
+            snap_all = self._with_file(self._read_files(live, snap.schema))
             del_uris = [
                 r["__file"]
                 for r in snap_all.filter(nmbs_cond)
@@ -1663,8 +1704,8 @@ class VintageTable:
             ]
             touched = sorted(set(touched) | {self._rel(u) for u in del_uris})
 
-        target_schema = self._schema_at() if self.exists() else src.schema
-        if self.exists() and not schema_evolution and not clause_mode:
+        target_schema = snap.schema if exists else src.schema
+        if exists and not schema_evolution and not clause_mode:
             # Delta parity for star semantics (the default verb IS
             # updateAll + insertAll): without autoMerge, source columns
             # outside the target schema raise — the projections below
@@ -1683,15 +1724,6 @@ class VintageTable:
                     f"schema; pass schema_evolution=True to add them "
                     "(Delta raises here too)"
                 )
-
-        def _pad_to(frame: DataFrame, schema) -> DataFrame:
-            """Project onto schema order, adding evolved columns an old file
-            lacks as typed nulls."""
-            have = set(frame.columns)
-            for f in schema.fields:
-                if f.name not in have:
-                    frame = frame.withColumn(f.name, F.lit(None).cast(f.dataType))
-            return frame.select(*[f.name for f in schema.fields])
 
         if clause_mode:
             # ---- Delta conditional-clause semantics (see docstring) ----
@@ -1747,10 +1779,17 @@ class VintageTable:
             )
             if never_inserts:
                 ins_src = self.spark.createDataFrame([], target_schema)
-            elif schema_evolution:
-                ins_src = _pad_to(src, target_schema)
             else:
-                ins_src = src.select(*tcols)
+                ins_src = _pad_to(src, target_schema.fields) if schema_evolution else src
+                if insert_condition is not None:
+                    # on the source's own columns, BEFORE the projection
+                    # onto the target drops source-only ones
+                    ins_src = ins_src.filter(
+                        F.coalesce(
+                            F.expr(insert_condition).cast("boolean"), F.lit(False)
+                        )
+                    )
+                ins_src = ins_src.select(*tcols)
             src_extra = src.select(
                 *key_cols,
                 *[
@@ -1768,8 +1807,8 @@ class VintageTable:
             upd_frames = None  # (before, after) for the change feed
             del_frame = None
             if touched:
-                touched_rows = self._read_files(touched)
-                tgt = _pad_to(touched_rows, target_schema)
+                touched_rows = self._read_files(touched, snap.schema)
+                tgt = _pad_to(touched_rows, target_schema.fields)
                 joined = tgt.join(src_extra, key_cols, "left")
                 matched = F.coalesce(F.col("__m"), F.lit(False))
                 # NULL conditions act as not-satisfied (SQL WHEN semantics)
@@ -1821,10 +1860,6 @@ class VintageTable:
                         )
             else:
                 rewritten = None
-            if insert_condition is not None:
-                ins_src = ins_src.filter(
-                    F.coalesce(F.expr(insert_condition).cast("boolean"), F.lit(False))
-                )
             new_data = (
                 rewritten.unionByName(ins_src) if rewritten is not None else ins_src
             )
@@ -1851,10 +1886,10 @@ class VintageTable:
                 params["changeData"] = change_dir
             if txn_id is not None:
                 params["txnId"] = str(txn_id)
-            if not self.exists():
+            if not exists:
                 clause_schema_json = new_data.schema.json()
             elif schema_evolution and set(tcols) != {
-                f.name for f in self._schema_at().fields
+                f.name for f in snap.schema.fields
             }:
                 # evolved schema recorded with THIS commit; time travel
                 # below it replays the prior metaData, old schema intact
@@ -1870,7 +1905,7 @@ class VintageTable:
             )
 
         if touched:
-            touched_rows = self._read_files(touched)
+            touched_rows = self._read_files(touched, snap.schema)
             kept = touched_rows.join(src.select(*key_cols), key_cols, "left_anti")
             if nmbs_cond is not None:
                 # keep unmatched rows only where the delete condition is NOT
@@ -1884,7 +1919,7 @@ class VintageTable:
                 # every table column (select errors otherwise, like Delta),
                 # kept rows from pre-evolution files get typed-null padding
                 new_data = src.select(*[f.name for f in target_schema.fields]).unionByName(
-                    _pad_to(kept, target_schema)
+                    _pad_to(kept, target_schema.fields)
                 )
         elif schema_evolution:
             new_data = src
@@ -1916,19 +1951,20 @@ class VintageTable:
         else:
             changes = None
 
-        # Untouched files keep their old schema; mergeSchema on read surfaces
-        # evolved columns as nulls there, matching Delta autoMerge semantics.
+        # Untouched files keep their old columns; scans with the recorded
+        # (evolved) schema read the new ones as typed nulls there, matching
+        # Delta autoMerge semantics.
         # Data + CDC land as concurrent jobs (src is an eager checkpoint).
         add, change_dir = self._write_data_and_changes(new_data, changes)
         schema_json = None
-        if not self.exists():
+        if not exists:
             schema_json = new_data.schema.json()
         elif schema_evolution:
             # record prior-schema ∪ new columns — new_data alone can miss
             # table columns when the merge touched no (or only old) files
             from pyspark.sql.types import StructType
 
-            prior = self._schema_at()
+            prior = snap.schema
             names = {f.name for f in prior.fields}
             merged = StructType(
                 list(prior.fields)
@@ -1967,26 +2003,12 @@ class VintageTable:
         # the file-level rewrite below reasons about raw file contents, so
         # outstanding DVs must be folded in first (no-op commit-free when
         # none are live)
-        self.materialize_deletion_vectors()
-        live = self._live_files()
+        snap = self._fold_dvs(self._snapshot())
         cond = F.expr(condition)
-        touched = (
-            sorted(
-                {
-                    self._rel(r["__file"])
-                    for r in self._with_file(self._read_files(live))
-                    .filter(cond)
-                    .select("__file")
-                    .distinct()
-                    .collect()
-                }
-            )
-            if live
-            else []
-        )
+        touched = self._files_matching(snap, cond)
         if not touched:
             return self._commit("DELETE", {"predicate": condition}, [], [])
-        rows = self._read_files(touched)
+        rows = self._read_files(touched, snap.schema)
         # keep rows where the predicate is FALSE **or NULL** — SQL DELETE
         # only removes rows where it is true; a bare ~cond would silently
         # drop NULL-evaluating rows from rewritten files
@@ -2014,31 +2036,23 @@ class VintageTable:
         copy-on-write would rewrite a 128 MB file per touched row. Readers
         see the update immediately (DV anti-join hides the old rows, the
         appended file supplies the new ones)."""
-        live = self._live_files()
-        data, dvs = self._split_live(live)
+        snap = self._snapshot()
+        data, dvs = self._split_live(snap.files)
         cond = F.expr(condition)
         if not data:
             return self._commit(
                 "UPDATE", {"predicate": condition, "deletionVectors": "true"}, [], []
             )
-        snap = self._with_dv_key(self._read_files(data))
-        if dvs:
-            prior = self.spark.read.parquet(
-                *[os.path.join(self.path, f) for f in dvs]
-            ).select("file", "pos")
-            snap = snap.join(
-                prior,
-                (snap["__dv_file"] == prior["file"])
-                & (snap["__dv_pos"] == prior["pos"]),
-                "left_anti",
-            )
+        rows = self._drop_dv_rows(
+            self._with_dv_key(self._read_files(data, snap.schema)), dvs
+        )
         # pin the matched row set BEFORE any write: the DV sidecar and the
         # appended copies are separate jobs, and a non-deterministic
         # condition (rand(), current_timestamp()) re-evaluated per job
         # could hide one row set and append a different one — silent row
         # loss/duplication. localCheckpoint makes both jobs read the same
         # materialized rows.
-        matched = snap.filter(cond).localCheckpoint(eager=False)
+        matched = rows.filter(cond).localCheckpoint(eager=False)
         add_dv = self._write_dv_files(
             matched.select(
                 F.col("__dv_file").alias("file"), F.col("__dv_pos").alias("pos")
@@ -2094,26 +2108,12 @@ class VintageTable:
             return self._update_dv(condition, assignments)
         if mode != "copy_on_write":
             raise ValueError(f"mode={mode!r}; expected 'copy_on_write' or 'dv'")
-        self.materialize_deletion_vectors()  # see delete(): raw-file rewrite
-        live = self._live_files()
+        snap = self._fold_dvs(self._snapshot())  # see delete(): raw-file rewrite
         cond = F.expr(condition)
-        touched = (
-            sorted(
-                {
-                    self._rel(r["__file"])
-                    for r in self._with_file(self._read_files(live))
-                    .filter(cond)
-                    .select("__file")
-                    .distinct()
-                    .collect()
-                }
-            )
-            if live
-            else []
-        )
+        touched = self._files_matching(snap, cond)
         if not touched:
             return self._commit("UPDATE", {"predicate": condition}, [], [])
-        rows = self._read_files(touched)
+        rows = self._read_files(touched, snap.schema)
         updated = rows.withColumns(
             {
                 col: F.when(cond, F.expr(val) if isinstance(val, str) else val).otherwise(
@@ -2179,24 +2179,27 @@ class VintageTable:
           cluster (point-predicate pruning works) but range locality is
           given up rather than paying a global sort; Delta samples a range
           partitioner here, a fine future upgrade."""
-        snap = self.read()
+        snap = self._snapshot()
+        rows = self._scan(snap)
         if zorder_by:
             from sdlt_spark.store.zcurve import zorder_key
 
-            z = zorder_key(snap, zorder_by, dict_max=self._Z_DICT_MAX)
+            z = zorder_key(rows, zorder_by, dict_max=self._Z_DICT_MAX)
             reorg = (
-                snap.withColumn("__z", z)
+                rows.withColumn("__z", z)
                 .repartitionByRange(num_files, "__z")
                 .sortWithinPartitions("__z")
                 .drop("__z")
             )
         elif sort_by:
-            reorg = snap.repartitionByRange(num_files, *sort_by).sortWithinPartitions(*sort_by)
+            reorg = rows.repartitionByRange(num_files, *sort_by).sortWithinPartitions(*sort_by)
         else:
-            reorg = snap.repartition(num_files)
+            reorg = rows.repartition(num_files)
         add = self._write_files(reorg)
+        # retire exactly the files read: a commit that landed meanwhile
+        # keeps its files live
         return self._commit(
-            "WRITE", {"mode": "Overwrite", "dataChange": "false"}, add, self._live_files(),
+            "WRITE", {"mode": "Overwrite", "dataChange": "false"}, add, snap.files,
             data_change=False,
         )
 
@@ -2218,10 +2221,9 @@ class VintageTable:
         # DVs covering the files being rewritten must fold in; covering
         # retained files must stay — materializing globally keeps both
         # invariants with one simple rule
-        self.materialize_deletion_vectors()
-        data, _ = self._split_live(self._live_files())
+        snap = self._fold_dvs(self._snapshot())
         sized = []
-        for f in data:
+        for f in snap.files:
             try:
                 sized.append((f, os.path.getsize(os.path.join(self.path, f))))
             except OSError as exc:
@@ -2237,7 +2239,7 @@ class VintageTable:
             return None
         total = sum(s for _, s in small)
         n_out = max(1, (total + target_file_bytes - 1) // target_file_bytes)
-        rows = self._read_files([f for f, _ in small])
+        rows = self._read_files([f for f, _ in small], snap.schema)
         # coalesce, not repartition: merging small files is map-side
         # concatenation — a shuffle would move the same bytes twice
         add = self._write_files(rows.coalesce(int(n_out)))
@@ -2264,8 +2266,10 @@ class VintageTable:
         identically on both sides and would cancel in the exceptAll anyway
         — so skipping them is exact, and the diff cost is O(changed files),
         not O(table). A merge that rewrote 1% of a 100 TB table diffs ~1 TB."""
-        data_before, dv_before = self._split_live(self._live_files(version=from_version))
-        data_after, dv_after = self._split_live(self._live_files(version=to_version))
+        snap_before = self._snapshot(from_version)
+        snap_after = self._snapshot(to_version)
+        data_before, dv_before = self._split_live(snap_before.files)
+        data_after, dv_after = self._split_live(snap_after.files)
         live_before, live_after = set(data_before), set(data_after)
         read_before = live_before - live_after
         read_after = live_after - live_before
@@ -2280,12 +2284,8 @@ class VintageTable:
             cov_abs = set().union(*self._dv_coverage(sorted(changed_dv)).values())
             read_before |= {f for f in live_before if self._abs(f) in cov_abs}
             read_after |= {f for f in live_after if self._abs(f) in cov_abs}
-        before = self._read_files(sorted(read_before), version=from_version)
-        if read_before:
-            before = self._apply_dvs(before, dv_before)
-        after = self._read_files(sorted(read_after), version=to_version)
-        if read_after:
-            after = self._apply_dvs(after, dv_after)
+        before = self._scan(snap_before, sorted(read_before))
+        after = self._scan(snap_after, sorted(read_after))
         # Compare on the UNION of the two snapshot schemas, padding either
         # side's missing columns with typed nulls (CDC semantics, like
         # Delta's change feed): an update that only sets a newly-evolved
@@ -2293,21 +2293,12 @@ class VintageTable:
         # and rows in files common to both versions still cancel — they pad
         # identically on both sides. Intersecting columns instead would
         # report evolution-only updates as no-ops.
-        to_fields = self._schema_at(version=to_version).fields
+        to_fields = snap_after.schema.fields
         to_names = {f.name for f in to_fields}
         fields = list(to_fields) + [
-            f for f in self._schema_at(version=from_version).fields
-            if f.name not in to_names
+            f for f in snap_before.schema.fields if f.name not in to_names
         ]
-
-        def _pad(frame: DataFrame) -> DataFrame:
-            have = set(frame.columns)
-            for f in fields:
-                if f.name not in have:
-                    frame = frame.withColumn(f.name, F.lit(None).cast(f.dataType))
-            return frame.select(*[f.name for f in fields])
-
-        before, after = _pad(before), _pad(after)
+        before, after = _pad_to(before, fields), _pad_to(after, fields)
         # exceptAll keeps multiplicity: dropping one of two identical rows IS
         # a delete (plain subtract/set semantics would miss it)
         inserts = after.exceptAll(before).withColumn("_change_type", F.lit("insert"))
@@ -2335,34 +2326,43 @@ class VintageTable:
           deletes — no row comparison, O(changed files) reads;
         - dataChange=false commits (compaction) emit nothing.
         """
+        from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+        change_type = StructField("_change_type", StringType())
         hi = self.latest_version() if to_version is None else to_version
-        schema = self._schema_at(version=hi)
+        # schemas in effect before and at each commit, tracked through the
+        # ONE parse of the requested range (no replay per commit)
+        schema_json = (
+            self._snapshot(min(from_version - 1, hi)).schema_json
+            if from_version > 0
+            else None
+        )
         parts: list[DataFrame] = []
-        # incremental log parse: only the requested range is replayed
-        for c in self._commits(after=from_version - 1):
-            if c.version > hi:
-                break
+        for c in self._commits(after=from_version - 1, up_to=hi):
+            prior_json, schema_json = schema_json, c.schema_json or schema_json
             resolved = resolve_commit_changes(c, skip_change_commits, table=self)
             if resolved is None:
                 continue
             kind, payload = resolved[0], resolved[1]
             if kind == "dir":
-                df = self.spark.read.option("mergeSchema", "true").parquet(
-                    os.path.join(self.path, payload)
-                )
+                # change rows carry the commit's columns + _change_type
+                cdc = StructType(_schema_of(schema_json, c.version).fields + [change_type])
+                df = self._read_files([payload], cdc)
             else:
                 dv_ctx = resolved[2]
                 frames = []
                 inserts = [f for f, tag in payload if tag == "insert"]
                 deletes = [f for f, tag in payload if tag == "delete"]
                 if inserts:
-                    ins = self._read_files(inserts, version=c.version)
+                    ins = self._read_files(inserts, _schema_of(schema_json, c.version))
                     # e.g. a CLONE whose v0 carries translated DVs: the
                     # cloned rows minus what the DVs delete ARE the inserts
                     ins = self._apply_dvs(ins, dv_ctx["insert"])
                     frames.append(ins.withColumn("_change_type", F.lit("insert")))
                 if deletes:
-                    dels = self._read_files(deletes, version=max(c.version - 1, 0))
+                    dels = self._read_files(
+                        deletes, _schema_of(prior_json or schema_json, c.version)
+                    )
                     # DV sidecars retired along with their covered files
                     # (overwrite/restore of a DV-bearing table): the deleted
                     # rows are the files' rows as of version-1, i.e. minus
@@ -2374,24 +2374,18 @@ class VintageTable:
                 if len(frames) == 2:
                     df = df.unionByName(frames[1], allowMissingColumns=True)
             parts.append(df.withColumn("_commit_version", F.lit(c.version).cast("long")))
-        base = None
-        for p in parts:
-            base = p if base is None else base.unionByName(p, allowMissingColumns=True)
-        if base is None:
-            base = self.spark.createDataFrame([], schema).withColumns(
-                {
-                    "_change_type": F.lit(None).cast("string"),
-                    "_commit_version": F.lit(None).cast("long"),
-                }
-            )
+        out = StructType(
+            _schema_of(schema_json, hi).fields
+            + [change_type, StructField("_commit_version", LongType())]
+        )
+        if not parts:
+            return self.spark.createDataFrame([], out)
+        base = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+        )
         # stable output order: schema at `hi` (typed-null padding for rows
         # from pre-evolution commits), then the CDC bookkeeping columns
-        for f in schema.fields:
-            if f.name not in base.columns:
-                base = base.withColumn(f.name, F.lit(None).cast(f.dataType))
-        return base.select(
-            *[f.name for f in schema.fields], "_change_type", "_commit_version"
-        )
+        return _pad_to(base, out.fields)
 
     @_retry_conflicts
     def restore(self, version: int | None = None, timestamp: float | None = None) -> int:
@@ -2402,23 +2396,20 @@ class VintageTable:
         still exist on disk; no data is read or rewritten, so restoring a
         100 TB table is O(file-list) driver work. History is preserved (the
         restore is itself a new version), and restore-of-restore works."""
-        target_files = self._live_files(version=version, timestamp=timestamp)
-        if timestamp is not None and version is None:
-            # resolve for the history record
-            eligible = [c for c in self._commits() if c.timestamp <= timestamp]
-            version = eligible[-1].version
+        target = self._snapshot(version, timestamp)
+        version = target.version
         current = self._live_files()
-        add = [f for f in target_files if f not in current]
-        remove = [f for f in current if f not in target_files]
+        add = sorted(set(target.files) - set(current))
+        remove = sorted(set(current) - set(target.files))
         missing = [f for f in add if not os.path.exists(os.path.join(self.path, f))]
         if missing:
             raise FileNotFoundError(
                 f"cannot restore to version {version}: {len(missing)} file(s) "
                 f"already vacuumed, e.g. {missing[0]}"
             )
-        schema_json = self._schema_at(version=version).json()
         return self._commit(
-            "RESTORE", {"version": str(version)}, add, remove, schema_json=schema_json
+            "RESTORE", {"version": str(version)}, add, remove,
+            schema_json=target.schema.json(),
         )
 
     def _bootstrap_v0(
@@ -2485,16 +2476,14 @@ class VintageTable:
         yields for out-of-root files). The translation writes O(deleted
         rows) — the only bytes a shallow clone ever writes."""
         dest = VintageTable(self.spark, dest_path, commit_hook=self._publish)
-        files = self._live_files()
-        data, dvs = self._split_live(files)
+        snap = self._snapshot()
+        data, dvs = self._split_live(snap.files)
         rel_add = [
             os.path.relpath(os.path.join(self.path, f), dest.path) for f in data
         ]
         dv_rows = None
         if dvs:
-            src_dv = self.spark.read.parquet(
-                *[os.path.join(self.path, f) for f in dvs]
-            )
+            src_dv = self._read_dvs(dvs)
             # rewrite refs to canonical absolute source paths; already-
             # absolute refs (the source being itself a clone) pass through
             root = self.path.rstrip("/") + "/"
@@ -2511,8 +2500,8 @@ class VintageTable:
             dv_rows,
             stats,
             "CLONE",
-            {"source": self.path, "sourceVersion": str(self.latest_version())},
-            self._schema_at().json(),
+            {"source": self.path, "sourceVersion": str(snap.version)},
+            snap.schema.json(),
             partitions=parts or None,
         )
         return dest

@@ -889,3 +889,60 @@ def test_hamming_minchunk_emission_matches_dedup(spark):
             assert minimal == classic and len(minimal) > 0
     finally:
         dedup._HAMMING_MINCHUNK = old
+
+
+def test_driver_finish_gate_checks_both_edge_columns(spark, monkeypatch):
+    """The driver union-find needs Python's ``<`` to agree with Spark's
+    ordering on BOTH endpoint columns: a float column on either side keeps
+    the distributed rounds, which still label every component by its min."""
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    def schema(a, b):
+        return StructType([StructField("u", a), StructField("v", b)])
+
+    assert dedup._driver_orderable(schema(LongType(), LongType()))
+    assert not dedup._driver_orderable(schema(LongType(), DoubleType()))
+    assert not dedup._driver_orderable(schema(DoubleType(), LongType()))
+
+    def _refuse(_e2):
+        raise AssertionError("driver finish taken for a float edge column")
+
+    monkeypatch.setattr(dedup, "_driver_components", _refuse)
+    pairs = spark.createDataFrame(
+        [(1, 2.0), (2, 3.0), (10, 11.0)], "id_a long, id_b double"
+    )
+    ids = spark.createDataFrame([(i,) for i in range(12)], "doc_id long")
+    got = {
+        r["doc_id"]: int(r["cluster"])
+        for r in dedup.dedup_clusters(pairs, ids, "doc_id").collect()
+    }
+    want = {i: i for i in range(12)}
+    want.update({2: 1, 3: 1, 11: 10})
+    assert got == want
+
+
+def test_submit_deferred_keeps_background_failure_when_foreground_fails():
+    """Both legs fail: the foreground exception propagates and carries the
+    background Future, whose own failure can still be awaited; the caches
+    are released after both legs finished."""
+    from sdlt_spark.operators import minhash_index as mi
+
+    released = []
+
+    class _Cache:
+        def unpersist(self):
+            released.append(self)
+
+    def _bg():
+        raise dedup.PairBudgetExceeded("background over max_pairs")
+
+    def _fg():
+        raise RuntimeError("index write failed")
+
+    caches = [_Cache(), _Cache()]
+    with pytest.raises(RuntimeError, match="index write failed") as info:
+        mi._submit_deferred(_bg, caches, _fg)
+    fut = info.value.pending_verify
+    with pytest.raises(dedup.PairBudgetExceeded, match="max_pairs"):
+        fut.result(timeout=30)
+    assert released == caches

@@ -181,3 +181,28 @@ def test_clause_merge_is_time_travelable_and_cow(spark, tmp_path):
     assert t.read().count() == 19
     # copy-on-write: only the file(s) holding k=7 were replaced
     assert files_before & set(t._live_files())  # untouched files survive
+
+
+@pytest.mark.parametrize("evolve", [False, True])
+def test_insert_condition_on_source_only_column(spark, tmp_path, evolve):
+    """insert_condition sees the SOURCE's columns, including ones the
+    target lacks: it applies before inserts are projected onto the target
+    schema, with or without schema evolution."""
+    t = _mk(spark, str(tmp_path / "t"))
+    src = spark.createDataFrame(
+        [(1, 9, 111.0, 1), (100, 0, 1.0, 1), (101, 1, 2.0, 0)],
+        "k long, grp long, v double, flag int",
+    )
+    t.merge(
+        src, ["k"],
+        matched_update={"v": "src_v"},
+        insert_condition="flag = 1",
+        schema_evolution=evolve,
+    )
+    got = {r["k"]: r for r in t.read().collect()}
+    assert got[1]["v"] == 111.0
+    assert 100 in got and 101 not in got
+    assert len(got) == 21
+    assert ("flag" in t.read().columns) == evolve
+    if evolve:
+        assert got[100]["flag"] == 1 and got[1]["flag"] is None
