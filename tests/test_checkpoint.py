@@ -83,3 +83,72 @@ def test_checkpoint_file_is_json_beside_log(spark, tmp_path):
     assert os.path.exists(path)
     # commit parser must not mistake it for a commit entry
     assert [c.version for c in t._commits()] == list(range(_CHECKPOINT_EVERY + 1))
+
+
+def _replays_from(t: VintageTable) -> list[int]:
+    """Record the ``after`` version of every log parse ``t`` makes."""
+    seen: list[int] = []
+    parse = t._commits
+
+    def spy(after=-1, up_to=None):
+        seen.append(after)
+        return parse(after=after, up_to=up_to)
+
+    t._commits = spy
+    return seen
+
+
+def test_constraints_come_from_the_checkpoint(spark, tmp_path):
+    import pytest
+
+    from sdlt_spark.store.vintage import ConstraintViolationError
+
+    t = _fresh(spark, tmp_path, 3)
+    t.add_constraint("v_small", "v < 1000")
+    t.add_constraint("k_nonneg", "k >= 0")
+    ckpt = t.checkpoint()
+    t.drop_constraint("v_small")
+    seen = _replays_from(t)
+    assert t.constraints() == {"k_nonneg": "k >= 0"}
+    # a write enforces the dropped constraint no more, the kept one still
+    t.write(spark.createDataFrame([(5000, 5000.0)], "k long, v double"), mode="append")
+    with pytest.raises(ConstraintViolationError):
+        t.write(spark.createDataFrame([(-1, 0.0)], "k long, v double"), mode="append")
+    assert seen and min(seen) >= ckpt  # no parse reached behind the checkpoint
+    assert t._snapshot(version=ckpt).constraints == {
+        "v_small": "v < 1000", "k_nonneg": "k >= 0"
+    }
+
+
+def test_txn_watermark_crosses_a_checkpoint(spark, tmp_path):
+    t = _fresh(spark, tmp_path, 2)
+    row = spark.createDataFrame([(1, 1.0)], "k long, v double")
+    t.write(row, mode="append", txn_id="streamA:4")
+    t.write(row, mode="append", txn_id="streamB:9")
+    t.write(row, mode="append")  # no token
+    ckpt = t.checkpoint()
+    t.write(row, mode="append", txn_id="streamA:5")
+    seen = _replays_from(t)
+    assert t.last_txn_id() == "streamA:5"
+    assert t.last_txn_id(app="streamA") == "5"
+    assert t.last_txn_id(app="streamB") == "9"
+    assert t.last_txn_id(app="other") is None
+    assert seen and min(seen) >= ckpt
+
+
+def test_checkpoint_without_protocol_state_falls_back_to_full_replay(spark, tmp_path):
+    import json
+
+    t = _fresh(spark, tmp_path, 2)
+    t.add_constraint("k_nonneg", "k >= 0")
+    t.write(spark.createDataFrame([(1, 1.0)], "k long, v double"), mode="append", txn_id="a:1")
+    ckpt = t.checkpoint()
+    path = os.path.join(t.path, "_vintage_log", f"{ckpt:08d}.checkpoint.json")
+    with open(path) as f:
+        payload = json.load(f)
+    del payload["constraints"], payload["txn"]  # the older payload shape
+    with open(path, "w") as f:
+        json.dump(payload, f)
+    assert t.constraints() == {"k_nonneg": "k >= 0"}
+    assert t.last_txn_id(app="a") == "1"
+    assert t.read().count() == 10 + 1 + 1
