@@ -20,9 +20,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from sdlt_spark import VintageTable, get_spark
-from sdlt_spark.store.sdmx import read_submission
+from sdlt_spark.store.sdmx import exr_input_dir, read_submission
 
-IN = "/root/reference/in"
+IN = exr_input_dir()
 
 
 def main() -> None:

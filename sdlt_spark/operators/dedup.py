@@ -139,15 +139,10 @@ def doc_ngrams(df: DataFrame, id_col: str, text_col: str = "text", n: int = 3) -
 MINHASH_PRIME = 2147483647  # 2^31 - 1
 _BAND_K = 1000003  # polynomial-combine base for band bucket hashes
 
-# Minimal-agreeing-band candidate emission toggle for the UNCAPPED
-# lsh_candidate_pairs path (round-14 adjudication knob; the capped path
-# always keeps the distinct — see the emission comment below). Identical
-# pair sets either way; this only picks which plan computes them, so an
-# isolation A/B can alternate the two forms without touching code.
-_LSH_MINBAND = os.environ.get("SDLT_LSH_MINBAND", "1") != "0"
-
-# The hamming-family twin (round-14): minimal-agreeing-CHUNK emission in
-# _hamming_pairs_grouped's uncapped path, same A/B-isolation role.
+# Minimal-agreeing-CHUNK emission toggle for _hamming_pairs_grouped's
+# uncapped path (round-14 adjudication knob). Identical pair sets either
+# way; this only picks which plan computes them, so an isolation A/B can
+# alternate the two forms without touching code.
 _HAMMING_MINCHUNK = os.environ.get("SDLT_HAMMING_MINCHUNK", "1") != "0"
 
 
@@ -367,7 +362,7 @@ def lsh_candidate_pairs(
         return acc
 
     band_hashes = F.array(*[_bh(b) for b in range(bands)])
-    if max_bucket_size is None and _LSH_MINBAND:
+    if max_bucket_size is None:
         # Minimal-agreeing-band emission (round 13): a pair colliding in
         # several bands used to emit one join row per band and pay a full
         # O(collisions) distinct exchange to dedup (near-identical docs

@@ -72,6 +72,12 @@ def pagerank(
     Plan depth grows linearly with ``iterations``; for long walks,
     localCheckpoint every few rounds (the k-means/label-propagation
     pattern elsewhere in this repo).
+
+    Result contract: above the persist gate (``_PAGERANK_PERSIST_MIN_BYTES``
+    of edges) the returned ranks are checkpoint-backed, computed once; below
+    it they are a LAZY frame, and every action on it re-runs the iterations
+    over the edge source. A caller that acts on small-input ranks more than
+    once should persist or checkpoint them itself.
     """
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (0, 100)")

@@ -42,13 +42,13 @@ from __future__ import annotations
 
 import json
 import os
-import threading
 import uuid
-from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import Future
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sdlt_spark.exec import overlap
 from sdlt_spark.operators.dedup import (
     _BAND_K,
     MINHASH_PRIME,
@@ -95,65 +95,6 @@ def _size_coalesced(df):
     return df.coalesce(max(1, -(-size // _INDEX_FILE_BYTES)))
 
 _PARAMS_FILE = "minhash_params.json"
-
-
-def _await_both(fg_fn, bg_fut):
-    """Run ``fg_fn`` in this thread while ``bg_fut`` (already submitted)
-    runs in the pool, then await the future. The FOREGROUND exception is
-    primary — it carries the actionable diagnostic (e.g.
-    ``PairBudgetExceeded``); a background failure is chained as its
-    explicit ``__cause__`` instead of silently replacing it from a
-    ``finally`` block (ADVICE round 13)."""
-    primary = None
-    result = None
-    try:
-        result = fg_fn()
-    except BaseException as exc:  # noqa: BLE001 — re-raised below
-        primary = exc
-    try:
-        bg_fut.result()
-    except BaseException as bg:  # noqa: BLE001 — chained or re-raised
-        if primary is not None:
-            raise primary from bg
-        raise
-    if primary is not None:
-        raise primary
-    return result
-
-
-def _submit_deferred(bg_fn, caches, fg_fn) -> Future:
-    """Deferred-mode overlap (guide §2.6 one level up): submit ``bg_fn``
-    to a single-thread pool, run ``fg_fn`` in this thread, and return the
-    Future. The background thread unpersists ``caches`` only after BOTH
-    its own work and the foreground leg finished (the event), so neither
-    leg ever races a cache teardown. The caller awaits the Future after
-    submitting the NEXT lifecycle step's jobs — that is the overlap. If
-    the foreground leg raises, the exception propagates immediately; the
-    background leg still completes (and cleans up) on its own thread, and
-    its Future rides on the exception as ``pending_verify``, so a
-    background failure (e.g. ``PairBudgetExceeded``) can still be
-    awaited."""
-    fg_done = threading.Event()
-
-    def _bg():
-        try:
-            return bg_fn()
-        finally:
-            fg_done.wait()
-            for c in caches:
-                c.unpersist()
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    fut = pool.submit(_bg)
-    pool.shutdown(wait=False)
-    try:
-        fg_fn()
-    except BaseException as exc:
-        exc.pending_verify = fut
-        raise
-    finally:
-        fg_done.set()
-    return fut
 
 
 def _band_exprs(num_hashes: int, bands: int) -> list:
@@ -276,18 +217,27 @@ def minhash_index_build(
     its watermark are then deterministic regardless of what concurrent
     ingest does to the corpus head.
 
-    ``defer`` (round-14, guide §2.6 one level up the lifecycle): when
-    True the function returns AS SOON AS the index write + params sidecar
-    have committed — i.e. as soon as a refresh against this index is
-    legal — and the first tuple element is a
-    :class:`concurrent.futures.Future` resolving to the checkpointed
-    initial-pairs frame (or raising what the verification raised, e.g.
-    :class:`~sdlt_spark.operators.dedup.PairBudgetExceeded`). The verify
-    jobs keep running in a background thread, overlapping whatever the
-    caller submits next (typically the first ``minhash_refresh``); the
-    signature cache is released by that thread once BOTH legs are done.
-    The pairs are bit-identical to the eager path — same plan, same
-    checkpoint — only the await point moves.
+    The index write runs in the calling thread while the pairs
+    verification runs beside it (:func:`sdlt_spark.exec.overlap`); the
+    signature cache is released once both are done. ``defer`` decides
+    only when the verification is awaited:
+
+    - ``defer=False`` waits for it and returns the checkpointed pairs
+      frame; a verification failure (e.g.
+      :class:`~sdlt_spark.operators.dedup.PairBudgetExceeded`) raises
+      from this call.
+    - ``defer=True`` returns AS SOON AS the index write + params sidecar
+      have committed — i.e. as soon as a refresh against this index is
+      legal — and the first tuple element is a
+      :class:`concurrent.futures.Future` resolving to the same pairs (or
+      raising what the verification raised). The verify jobs keep
+      running, overlapping whatever the caller submits next (typically
+      the first ``minhash_refresh``).
+
+    Pairs are bit-identical either way. When both legs fail, in either
+    mode, the index write's exception is the one raised: the
+    verification's exception (e.g. ``PairBudgetExceeded``) is its
+    ``__cause__``, and its finished Future is its ``pending_verify``.
     """
     from sdlt_spark.store import VintageTable
 
@@ -341,27 +291,16 @@ def minhash_index_build(
         pairs = _jaccard_verify_toks(cand, combined, id_col, threshold)
         return pairs.localCheckpoint(eager=True)
 
-    if defer:
-        # Write leg FOREGROUND (return = the index is committed and
-        # refreshable), verify leg BACKGROUND: the returned Future
-        # resolves to the checkpointed pairs, and the background thread
-        # releases the signature cache only after BOTH legs finished
-        # (the event), so the write never races a cache teardown.
-        out = _submit_deferred(_verify, [combined], _write_and_publish)
-    else:
-        pool = ThreadPoolExecutor(max_workers=1)
-        try:
-            fut = pool.submit(_write_and_publish)
-            out = _await_both(_verify, fut)
-        finally:
-            pool.shutdown(wait=True)
-            combined.unpersist()
+    # Write leg FOREGROUND (return = the index is committed and
+    # refreshable), verify leg BACKGROUND; the signature cache is released
+    # once both legs finished, before the Future resolves.
+    _, pairs = overlap(_write_and_publish, _verify, release=[combined])
     report = {
         "corpus_version": head,
         "indexed_docs": n_docs,
         "index_version": t.latest_version(),
     }
-    return out, report
+    return (pairs if defer else pairs.result()), report
 
 
 def minhash_refresh(
@@ -425,13 +364,20 @@ def minhash_refresh(
     breaker to the batch x batch banding (the batch x index probe is
     bounded by batch fan-out and is not separately estimated).
 
-    ``defer`` (round-14): when True the function returns AS SOON AS the
-    fold's merge commit lands — i.e. as soon as the NEXT refresh is legal
-    — and ``new_pairs`` is a :class:`concurrent.futures.Future` resolving
-    to the checkpointed pairs frame. Fold N's verification then overlaps
-    fold N+1's signature/probe work (guide §2.6 applied across lifecycle
-    steps, round-13 verdict item 3); pairs are bit-identical to the eager
-    path — same plan, same checkpoint — only the await point moves.
+    Steps 4 and 5 overlap (:func:`sdlt_spark.exec.overlap`): the merge
+    commit runs in the calling thread while the verification runs beside
+    it, and ``defer`` decides only when the verification is awaited.
+    ``defer=False`` waits for it and returns the pairs frame, so a
+    verification failure (e.g. ``PairBudgetExceeded``) raises from this
+    call. ``defer=True`` returns AS SOON AS the fold's merge commit lands
+    — i.e. as soon as the NEXT refresh is legal — and ``new_pairs`` is a
+    :class:`concurrent.futures.Future` resolving to the checkpointed pairs
+    frame. Fold N's verification then overlaps fold N+1's signature/probe
+    work (guide §2.6 applied across lifecycle steps). Pairs are
+    bit-identical either way. When both legs fail, in either mode, the
+    merge's exception is the one raised: the verification's exception
+    (e.g. ``PairBudgetExceeded``) is its ``__cause__``, and its finished
+    Future is its ``pending_verify``.
     """
     from pyspark.sql import Window
 
@@ -663,18 +609,10 @@ def minhash_refresh(
         # list by index_snap. So they run as CONCURRENT Spark jobs
         # (guide §2.6), the merge's commit machinery (zone-map agg, touched
         # scan, data + CDC writes) hiding under the verify's candidate
-        # compute.
-        #
-        # Eager mode: the refresh returns only after BOTH finish; the
-        # verify's exception is primary, a merge failure chains onto it
-        # (_await_both). Deferred mode: the merge runs FOREGROUND (return
-        # = the new watermark is committed, so the NEXT refresh is legal)
-        # and the verify keeps running on a background thread whose
-        # Future is returned in place of the pairs frame — fold N's
-        # verification overlaps fold N+1's signature/probe work, and the
-        # background thread releases the fold's caches once both legs are
-        # done. Pairs are bit-identical either way — same plan, same
-        # checkpoint; only the await point moves.
+        # compute. The merge runs FOREGROUND (return = the new watermark is
+        # committed, so the NEXT refresh is legal) and the verify on the
+        # background thread, which releases the fold's caches once both
+        # legs are done.
         def _verify():
             return (
                 _materialize_and_release(pairs_plan, cand, fetch)
@@ -682,29 +620,20 @@ def minhash_refresh(
                 else empty_pairs
             )
 
-        if defer:
-            # stale_out checkpoints BEFORE cleanup ownership moves to the
-            # background thread — it must not race stale's unpersist
-            stale_out = stale.localCheckpoint(eager=True)
-            caches = list(persisted)
-            persisted.clear()  # background thread owns their release now
-            pairs = _submit_deferred(_verify, caches, _fold_merge)
-        else:
-            pool = ThreadPoolExecutor(max_workers=1)
-            try:
-                fut = pool.submit(_fold_merge)
-                pairs = _await_both(_verify, fut)
-            finally:
-                pool.shutdown(wait=True)
-            stale_out = stale.localCheckpoint(eager=True)
+        # stale_out checkpoints BEFORE cleanup ownership moves to the
+        # background thread — it must not race stale's unpersist
+        stale_out = stale.localCheckpoint(eager=True)
+        caches = list(persisted)
+        persisted.clear()  # overlap owns their release now
+        _, pairs = overlap(_fold_merge, _verify, release=caches)
     finally:
         # double-unpersist of frames _materialize_and_release already
         # dropped is a harmless no-op; what matters is that NO path —
         # including a PairBudgetExceeded abort mid-probe — leaves an
-        # O(corpus) cache entry behind in a long-lived session (in
-        # deferred mode the background thread owns exactly the same
-        # cleanup; `persisted` was handed over empty)
+        # O(corpus) cache entry behind in a long-lived session (once the
+        # legs start, overlap owns exactly the same cleanup; `persisted`
+        # was handed over empty)
         for c in persisted:
             c.unpersist()
     report["index_version"] = t.latest_version()
-    return pairs, stale_out, report
+    return (pairs if defer else pairs.result()), stale_out, report

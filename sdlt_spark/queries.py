@@ -3352,6 +3352,11 @@ def except_op(spark: SparkSession, sf_dir: str) -> DataFrame:
     return f.subtract(op)
 
 
+from sdlt_spark.store.sdmx import exr_input_dir  # noqa: E402
+
+_EXR_IN = exr_input_dir()
+
+
 @_q(
     "csv_scan",
     # DuckDB reads the same CSV with the same explicit column types (no
@@ -3361,7 +3366,7 @@ def except_op(spark: SparkSession, sf_dir: str) -> DataFrame:
            OBS_VALUE, OBS_STATUS, COLLECTION, DECIMALS, TITLE, UNIT, UNIT_MULT,
            concat_ws(':', FREQ, CURRENCY, CURRENCY_DENOM, EXR_TYPE, EXR_SUFFIX,
                      TIME_PERIOD) AS KEY
-    FROM read_csv('/root/reference/in/data.0.csv', header=true, columns={
+    FROM read_csv('""" + _EXR_IN + """/data.0.csv', header=true, columns={
       'FREQ':'VARCHAR','CURRENCY':'VARCHAR','CURRENCY_DENOM':'VARCHAR',
       'EXR_TYPE':'VARCHAR','EXR_SUFFIX':'VARCHAR','TIME_PERIOD':'VARCHAR',
       'OBS_VALUE':'DOUBLE','OBS_STATUS':'VARCHAR','COLLECTION':'VARCHAR',
@@ -3371,11 +3376,12 @@ def except_op(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1: CSV source with header + explicit non-null schema + derived KEY
-    (README.md:45-80). 504 rows from the reference's own data.0.csv, now
+    (README.md:45-80). 504 rows from the choreography's data.0.csv (the
+    reference's own, or the vendored copy; see ``exr_input_dir``),
     value-hash-checked against DuckDB's read_csv of the same file."""
     from sdlt_spark.store.sdmx import read_submission
 
-    return read_submission(spark, "/root/reference/in/data.0.csv")
+    return read_submission(spark, f"{_EXR_IN}/data.0.csv")
 
 
 @_q(
@@ -4485,7 +4491,7 @@ def minhash_lsh_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     key = (id(spark), sf_dir)
     cached = _MINHASH_INCREMENTAL.get(key)
     if cached is None:
-        from concurrent.futures import ThreadPoolExecutor
+        from sdlt_spark.exec import overlap
 
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
         root = tempfile.mkdtemp(prefix="sdlt_mh_inc_")
@@ -4508,23 +4514,19 @@ def minhash_lsh_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         # three Futures are awaited only at the final union. Pairs are
         # bit-identical to the eager lifecycle (same plans, same
         # checkpoints), which the from-scratch-equality oracle asserts.
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            m1 = pool.submit(
-                corpus.merge, docs.filter(F.col("doc_id") % 5 == 3), ["doc_id"]
-            )
-            f0, _rep = _mi.minhash_index_build(
+        (f0, _rep), m1 = overlap(
+            lambda: _mi.minhash_index_build(
                 corpus, idx, "doc_id", "text", threshold=0.9, version=v0,
                 defer=True,
-            )
-            v1 = m1.result()
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            m2 = pool.submit(
-                corpus.merge, docs.filter(F.col("doc_id") % 5 == 4), ["doc_id"]
-            )
-            f1, _s1, _r1 = _mi.minhash_refresh(
-                corpus, idx, to_version=v1, defer=True
-            )
-            m2.result()
+            ),
+            lambda: corpus.merge(docs.filter(F.col("doc_id") % 5 == 3), ["doc_id"]),
+        )
+        v1 = m1.result()
+        (f1, _s1, _r1), m2 = overlap(
+            lambda: _mi.minhash_refresh(corpus, idx, to_version=v1, defer=True),
+            lambda: corpus.merge(docs.filter(F.col("doc_id") % 5 == 4), ["doc_id"]),
+        )
+        m2.result()
         f2, _s2, _r2 = _mi.minhash_refresh(corpus, idx, defer=True)
         # the three legs are already checkpoint-backed; the union is cheap
         # and cached so repeat correctness calls don't rebuild the lifecycle
@@ -4588,7 +4590,7 @@ def ann_ivf_refresh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (id(spark), sf_dir)
     entry = _IVF_REFRESH.get(key)
     if entry is None:
-        from concurrent.futures import ThreadPoolExecutor
+        from sdlt_spark.exec import overlap
 
         emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
         root = tempfile.mkdtemp(prefix="sdlt_ivf_refresh_")
@@ -4601,13 +4603,14 @@ def ann_ivf_refresh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         # commit (v1) are independent jobs — run them concurrently
         # (guide §2.6); ivf_refresh below folds v1..v2 CDC either way.
         snap0 = corpus.read()
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut_del = pool.submit(corpus.delete, "vec_id % 9 = 2")
-            _, cents = _sim.ivf_build(
+        (_, cents), fut_del = overlap(
+            lambda: _sim.ivf_build(
                 snap0, "embedding", "vec_id", idx, n_cells=16,
                 txn_id=f"ivf_refresh:{v0}",
-            )
-            fut_del.result()
+            ),
+            lambda: corpus.delete("vec_id % 9 = 2"),
+        )
+        fut_del.result()
         corpus.merge(  # flip a slice across cells + plant fresh ids
             emb.filter((F.col("vec_id") % 9 != 2) & (F.col("vec_id") % 6 == 1))
             .select(

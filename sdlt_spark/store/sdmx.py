@@ -11,9 +11,26 @@ one key and merge into each other — see ``with_key``.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# The choreography's input CSVs (data.0.csv … data.6.csv): the reference
+# checkout's own when present, else the deterministic copy vendored under
+# tests/fixtures/sdmx_exr (written by generate.py there, same row counts
+# and codes).
+_REFERENCE_IN = "/root/reference/in"
+_VENDORED_IN = os.path.normpath(
+    os.path.join(os.path.dirname(os.path.abspath(__file__)), "../../tests/fixtures/sdmx_exr")
+)
+
+
+def exr_input_dir() -> str:
+    """Directory holding the choreography's ``data.{0..6}.csv``."""
+    return _REFERENCE_IN if os.path.isdir(_REFERENCE_IN) else _VENDORED_IN
+
 
 # README.md:70 — dimension columns, in key order (time dimension last)
 DIMENSIONS = ["FREQ", "CURRENCY", "CURRENCY_DENOM", "EXR_TYPE", "EXR_SUFFIX", "TIME_PERIOD"]

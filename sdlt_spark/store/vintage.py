@@ -53,6 +53,8 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sdlt_spark.exec import overlap
+
 _LOG_DIR = "_vintage_log"
 _DATA_DIR = "data"
 _CHANGE_DIR = "_change_data"
@@ -800,7 +802,15 @@ class VintageTable:
         remove: list[str],
         data_change: bool = True,
         schema_json: str | None = None,
+        read_version: int | None = None,
     ) -> int:
+        """Publish one commit entry. An op that read the table passes the
+        version of the snapshot it read as ``read_version`` and publishes at
+        the version right after it, so the CAS fails with
+        ``CommitConflictError`` (and ``_retry_conflicts`` re-derives the op)
+        whenever another commit landed since that snapshot. Without it —
+        creating a table, or a blind append, which reads no rows — the
+        entry publishes at the head, as Delta's blind appends do."""
         tid = (params or {}).get("txnId")
         if tid is not None and str(tid).count(":") > 1:
             # the app-scoped watermark contract encodes '<app>:<version>';
@@ -813,7 +823,7 @@ class VintageTable:
                 "against the '<app>:<version>' scoped-watermark encoding "
                 "(see last_txn_id)"
             )
-        version = self._next_version()
+        version = self._next_version() if read_version is None else read_version + 1
         entry = _Commit(
             version=version,
             timestamp=time.time(),
@@ -980,15 +990,11 @@ class VintageTable:
         """
         if changes is None or not self.change_feed:
             return self._write_files(new_data, snap), None
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=1)
-        try:
-            fut = pool.submit(self._write_change_data, changes)
-            add = self._write_files(new_data, snap)
-            return add, fut.result()
-        finally:
-            pool.shutdown(wait=True)
+        add, fut = overlap(
+            lambda: self._write_files(new_data, snap),
+            lambda: self._write_change_data(changes),
+        )
+        return add, fut.result()
 
     def _stats_path(self) -> str:
         return os.path.join(self.path, _LOG_DIR, "file_stats.json")
@@ -1328,7 +1334,8 @@ class VintageTable:
         cond = F.expr(condition)
         if not data:
             return self._commit(
-                "DELETE", {"predicate": condition, "deletionVectors": "true"}, [], []
+                "DELETE", {"predicate": condition, "deletionVectors": "true"}, [], [],
+                read_version=snap.version,
             )
         # already-deleted rows are excluded first, so re-deleting is a no-op
         rows = self._drop_dv_rows(
@@ -1352,7 +1359,7 @@ class VintageTable:
         params = {"predicate": condition, "deletionVectors": "true"}
         if change_dir:
             params["changeData"] = change_dir
-        return self._commit("DELETE", params, add, [])
+        return self._commit("DELETE", params, add, [], read_version=snap.version)
 
     @_retry_conflicts
     def materialize_deletion_vectors(self) -> int | None:
@@ -1392,6 +1399,7 @@ class VintageTable:
             add,
             remove,
             data_change=False,
+            read_version=snap.version,
         )
         live = set(snap.files).difference(remove) | set(add)
         return replace(snap, version=version, files=sorted(live))
@@ -1493,17 +1501,19 @@ class VintageTable:
         here, exactly as Delta does) and every future write enforces it
         in-flight (see ``_write_files``). SQL-standard CHECK semantics: a
         row passes when the predicate is TRUE or NULL (unknown)."""
-        if name in self.constraints():
+        snap = self._snapshot()
+        if name in snap.constraints:
             raise ValueError(f"constraint {name!r} already exists")
         ok = F.coalesce(F.expr(expr).cast("boolean"), F.lit(True))
-        n_bad = self.read().filter(~ok).count()
+        n_bad = self._scan(snap).filter(~ok).count()
         if n_bad:
             raise ConstraintViolationError(
                 f"cannot add constraint {name!r}: {n_bad} existing row(s) "
                 f"violate CHECK ({expr})"
             )
         return self._commit(
-            "ADD CONSTRAINT", {"name": name, "expr": expr}, [], [], data_change=False
+            "ADD CONSTRAINT", {"name": name, "expr": expr}, [], [], data_change=False,
+            read_version=snap.version,
         )
 
     @_retry_conflicts
@@ -1610,7 +1620,9 @@ class VintageTable:
                     f"schema_evolution=True) or mode='overwrite' to evolve"
                 )
         add = self._write_files(df, snap)
-        remove = self._live_files() if (mode == "overwrite" and snap is not None) else []
+        # an overwrite retires the files of the snapshot it replaced, so it
+        # conflicts with any commit since; an append reads nothing (blind)
+        replaced = snap if (mode == "overwrite" and snap is not None) else None
         params = {"mode": "Overwrite" if mode == "overwrite" else mode.title()}
         if txn_id is not None:
             params["txnId"] = str(txn_id)
@@ -1618,8 +1630,9 @@ class VintageTable:
             "WRITE",
             params,
             add,
-            remove,
+            replaced.files if replaced else [],
             schema_json=df.schema.json(),
+            read_version=replaced.version if replaced else None,
         )
 
     @_retry_conflicts
@@ -1712,7 +1725,7 @@ class VintageTable:
             params["changeData"] = change_dir
         return self._commit(
             "WRITE", params, add_new + add_kept, touched,
-            schema_json=snap.schema_json,
+            schema_json=snap.schema_json, read_version=snap.version,
         )
 
     def last_txn_id(self, app: str | None = None) -> str | None:
@@ -2154,6 +2167,7 @@ class VintageTable:
                 add,
                 touched,
                 schema_json=clause_schema_json,
+                read_version=snap.version if snap else None,
             )
 
         if touched:
@@ -2232,7 +2246,10 @@ class VintageTable:
         if txn_id is not None:
             # idempotence token for replay-prone sinks (see write(txn_id=))
             params["txnId"] = str(txn_id)
-        return self._commit("MERGE", params, add, touched, schema_json=schema_json)
+        return self._commit(
+            "MERGE", params, add, touched, schema_json=schema_json,
+            read_version=snap.version if snap else None,
+        )
 
     @_retry_conflicts
     def delete(self, condition: str, mode: str = "copy_on_write") -> int:
@@ -2258,7 +2275,9 @@ class VintageTable:
         cond = F.expr(condition)
         touched = self._files_matching(snap, cond)
         if not touched:
-            return self._commit("DELETE", {"predicate": condition}, [], [])
+            return self._commit(
+                "DELETE", {"predicate": condition}, [], [], read_version=snap.version
+            )
         rows = self._read_files(touched, snap.schema)
         # keep rows where the predicate is FALSE **or NULL** — SQL DELETE
         # only removes rows where it is true; a bare ~cond would silently
@@ -2278,7 +2297,7 @@ class VintageTable:
         params = {"predicate": condition}
         if change_dir:
             params["changeData"] = change_dir
-        return self._commit("DELETE", params, add, touched)
+        return self._commit("DELETE", params, add, touched, read_version=snap.version)
 
     def _update_dv(self, condition: str, assignments: dict) -> int:
         """Merge-on-read update: record the matched rows' positions as a
@@ -2293,7 +2312,8 @@ class VintageTable:
         cond = F.expr(condition)
         if not data:
             return self._commit(
-                "UPDATE", {"predicate": condition, "deletionVectors": "true"}, [], []
+                "UPDATE", {"predicate": condition, "deletionVectors": "true"}, [], [],
+                read_version=snap.version,
             )
         rows = self._drop_dv_rows(
             self._with_dv_key(self._read_files(data, snap.schema)), dvs
@@ -2327,7 +2347,9 @@ class VintageTable:
         params = {"predicate": condition, "deletionVectors": "true"}
         if change_dir:
             params["changeData"] = change_dir
-        return self._commit("UPDATE", params, add_dv + add_data, [])
+        return self._commit(
+            "UPDATE", params, add_dv + add_data, [], read_version=snap.version
+        )
 
     @_retry_conflicts
     def update(
@@ -2351,7 +2373,9 @@ class VintageTable:
         cond = F.expr(condition)
         touched = self._files_matching(snap, cond)
         if not touched:
-            return self._commit("UPDATE", {"predicate": condition}, [], [])
+            return self._commit(
+                "UPDATE", {"predicate": condition}, [], [], read_version=snap.version
+            )
         rows = self._read_files(touched, snap.schema)
         assigned = _conform_assignments(rows, assignments, snap.schema.fields)
         updated = rows.withColumns(
@@ -2370,7 +2394,7 @@ class VintageTable:
         params = {"predicate": condition}
         if change_dir:
             params["changeData"] = change_dir
-        return self._commit("UPDATE", params, add, touched)
+        return self._commit("UPDATE", params, add, touched, read_version=snap.version)
 
     # ---------------------------------------------------------- maintenance
 
@@ -2426,11 +2450,9 @@ class VintageTable:
         else:
             reorg = rows.repartition(num_files)
         add = self._write_files(reorg, snap)
-        # retire exactly the files read: a commit that landed meanwhile
-        # keeps its files live
         return self._commit(
             "WRITE", {"mode": "Overwrite", "dataChange": "false"}, add, snap.files,
-            data_change=False,
+            data_change=False, read_version=snap.version,
         )
 
     @_retry_conflicts
@@ -2483,6 +2505,7 @@ class VintageTable:
             add,
             [f for f, _ in small],
             data_change=False,
+            read_version=snap.version,
         )
 
     def diff(self, from_version: int, to_version: int | None = None) -> DataFrame:
@@ -2628,7 +2651,8 @@ class VintageTable:
         restore is itself a new version), and restore-of-restore works."""
         target = self._snapshot(version, timestamp)
         version = target.version
-        current = self._live_files()
+        head = self._snapshot()
+        current = head.files
         add = sorted(set(target.files) - set(current))
         remove = sorted(set(current) - set(target.files))
         missing = [f for f in add if not os.path.exists(os.path.join(self.path, f))]
@@ -2639,7 +2663,7 @@ class VintageTable:
             )
         return self._commit(
             "RESTORE", {"version": str(version)}, add, remove,
-            schema_json=target.schema.json(),
+            schema_json=target.schema.json(), read_version=head.version,
         )
 
     def _bootstrap_v0(

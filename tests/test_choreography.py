@@ -11,9 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from sdlt_spark.store import VintageTable
-from sdlt_spark.store.sdmx import read_submission
+from sdlt_spark.store.sdmx import exr_input_dir, read_submission
 
-IN = "/root/reference/in"
+IN = exr_input_dir()
 
 
 @pytest.fixture(scope="module")

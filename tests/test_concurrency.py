@@ -252,3 +252,39 @@ def test_dv_delete_races_with_append_both_land(spark, tmp_path):
     # no leaked sidecars: every live dv file is referenced by a commit
     live_dv = [f for f in reader._live_files() if f.startswith("dv/")]
     assert set(live_dv) <= _referenced(reader)
+
+
+def test_merge_conflicts_with_delete_landed_after_its_snapshot(spark, tmp_path):
+    """A delete through a second handle commits after a merge took its
+    snapshot and before the merge commits. The merge must not publish over
+    it: it commits at the version after its snapshot, so its CAS fails and
+    the retry re-derives it against the delete's state. Publishing at the
+    head instead rewrote the deleted row's file from the stale snapshot:
+    19 rows, 9 keys twice, and k = 5 back."""
+    path = str(tmp_path / "t")
+    df = spark.range(10).select(F.col("id").alias("k"), (F.col("id") * 1.0).alias("v"))
+    VintageTable(spark, path).write(df.coalesce(1))
+    a = VintageTable(spark, path)
+    b = VintageTable(spark, path)
+
+    state = {"injected": False}
+    write_files = a._write_files
+
+    def racing_write(frame, snap):
+        if not state["injected"]:
+            state["injected"] = True
+            b.delete("k = 5")  # lands after a's snapshot, before a commits
+        return write_files(frame, snap)
+
+    a._write_files = racing_write
+    src = spark.createDataFrame([(0, -1.0)], "k long, v double")
+    a.merge(src, ["k"])
+
+    assert state["injected"], "race never triggered"
+    rows = [(r["k"], r["v"]) for r in a.read().collect()]
+    keys = [k for k, _ in rows]
+    assert len(rows) == 9 and len(set(keys)) == 9
+    assert 5 not in keys
+    assert dict(rows)[0] == -1.0
+    assert [c.operation for c in a._commits()] == ["WRITE", "DELETE", "MERGE"]
+    assert set(_data_files(a)) <= _referenced(a)

@@ -919,30 +919,3 @@ def test_driver_finish_gate_checks_both_edge_columns(spark, monkeypatch):
     want = {i: i for i in range(12)}
     want.update({2: 1, 3: 1, 11: 10})
     assert got == want
-
-
-def test_submit_deferred_keeps_background_failure_when_foreground_fails():
-    """Both legs fail: the foreground exception propagates and carries the
-    background Future, whose own failure can still be awaited; the caches
-    are released after both legs finished."""
-    from sdlt_spark.operators import minhash_index as mi
-
-    released = []
-
-    class _Cache:
-        def unpersist(self):
-            released.append(self)
-
-    def _bg():
-        raise dedup.PairBudgetExceeded("background over max_pairs")
-
-    def _fg():
-        raise RuntimeError("index write failed")
-
-    caches = [_Cache(), _Cache()]
-    with pytest.raises(RuntimeError, match="index write failed") as info:
-        mi._submit_deferred(_bg, caches, _fg)
-    fut = info.value.pending_verify
-    with pytest.raises(dedup.PairBudgetExceeded, match="max_pairs"):
-        fut.result(timeout=30)
-    assert released == caches

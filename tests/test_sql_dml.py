@@ -12,9 +12,9 @@ from pyspark.sql import functions as F
 
 from sdlt_spark.sql_dml import SqlDispatcher, SqlParseError
 from sdlt_spark.store import VintageTable
-from sdlt_spark.store.sdmx import read_submission
+from sdlt_spark.store.sdmx import exr_input_dir, read_submission
 
-IN = "/root/reference/in"
+IN = exr_input_dir()
 
 
 def _n(df) -> int:
