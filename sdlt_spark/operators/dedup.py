@@ -1603,7 +1603,7 @@ def ngram_jaccard_pairs(
 # class as the k-means centroid collects. Scale-safe by construction: the
 # gate reads the EXACT contracted edge count the loop already computes, so
 # a 100 TB graph whose remnant stays large never collects anything.
-_CC_DRIVER_EDGES = int(os.environ.get("SDLT_CC_DRIVER_EDGES", str(100_000)))
+_CC_DRIVER_EDGES = 100_000
 
 
 def _driver_orderable(schema) -> bool:

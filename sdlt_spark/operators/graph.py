@@ -17,8 +17,6 @@ Ranks are fixed-point: ``scale`` = 1.0.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,9 +31,7 @@ from pyspark.sql import functions as F
 # results either way (the integer arithmetic is deterministic), plan
 # picked by input size; stats unavailable -> persist (the scale-safe
 # side, matching the 100 TB design point).
-_PAGERANK_PERSIST_MIN_BYTES = int(
-    os.environ.get("SDLT_PAGERANK_PERSIST_MIN_BYTES", str(64 << 20))
-)
+_PAGERANK_PERSIST_MIN_BYTES = 64 << 20
 
 
 def pagerank(

@@ -69,7 +69,7 @@ from sdlt_spark.operators.packing import _plan_size_bytes
 # merge's footer stats (guide: keep files in the 128 MB-1 GB band). The
 # writer coalesces to ceil(cached_bytes / this) files — scale-adaptive:
 # one file at bench scale, ~128 MB files at 100 TB.
-_INDEX_FILE_BYTES = int(os.environ.get("SDLT_INDEX_FILE_BYTES", str(128 << 20)))
+_INDEX_FILE_BYTES = 128 << 20
 
 # Candidate-fetch prune gate (bytes of live index data files). The verify
 # step only needs (__toks, h*) rows for CANDIDATE ids; at 100 TB pruning
@@ -81,7 +81,7 @@ _INDEX_FILE_BYTES = int(os.environ.get("SDLT_INDEX_FILE_BYTES", str(128 << 20)))
 # machinery costs more than it saves. Gate it on the live index's
 # data-file bytes, read from driver-side commit metadata (the packing.py
 # size-gated-plan pattern: same results either way, plan picked by size).
-_PRUNE_MIN_BYTES = int(os.environ.get("SDLT_MINHASH_PRUNE_MIN_BYTES", str(256 << 20)))
+_PRUNE_MIN_BYTES = 256 << 20
 
 
 def _size_coalesced(df):

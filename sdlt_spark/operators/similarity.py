@@ -624,7 +624,7 @@ def ivf_search(
     probe = sorted(np.argsort(-(cents @ qv))[:nprobe].tolist())
     snap = t._snapshot(version=v)
     files = sorted(
-        {f for c in probe for f in t._prune_by_range(snap.files, "__cell", c, c)}
+        {f for c in probe for f in t._prune_by_range(snap, "__cell", c, c)}
     )
     probed = t._read_files(files, snap.schema).filter(F.col("__cell").isin(*probe))
     return cosine_topk(probed, vec_col, id_col, query, k)

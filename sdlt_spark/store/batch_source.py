@@ -167,10 +167,10 @@ class VintageSnapshotReader(DataSourceReader):
 
     def partitions(self):
         t = _table(self._path)
-        live = t._live_files(version=self._version, timestamp=self._timestamp)
-        data, dvs = VintageTable._split_live(live)
+        snap = t._snapshot(version=self._version, timestamp=self._timestamp)
+        data, dvs = VintageTable._split_live(snap.files)
         for col, lo, hi in self._ranges:
-            data = t._prune_by_range(data, col, lo, hi)
+            data = t._prune_by_range(snap, col, lo, hi, data)
         root = os.path.abspath(self._path)
         # Driver-side coverage map: each partition ships ONLY the sidecars
         # that cover its file — shipping the full DV list made every
@@ -346,9 +346,9 @@ class VintageWriter(DataSourceArrowWriter):
                         f"CHECK constraint {name} ({expr}) violated by "
                         f"{n_bad} staged row(s); write aborted"
                     )
-        t._op_files = list(files)
+        t._op_files = dict.fromkeys(files)
         try:
-            t._collect_stats(files)
+            t._op_files.update(t._collect_stats(files))
             params = {"mode": "Overwrite" if self._overwrite else "Append"}
             if self._txn_id is not None:
                 params["txnId"] = str(self._txn_id)

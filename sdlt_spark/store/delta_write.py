@@ -1083,7 +1083,7 @@ def export_vintage_to_delta(
         # stock reader — split ALL the files instead
         part_cols = list(snap.partition_columns)
         mat_rels = sorted(data)
-    src_stats = vintage._file_stats()
+    src_stats = vsnap.stats
     coverage = vintage._dv_coverage(dvs) if dvs else {}
     covering: dict[str, list[str]] = {rel: [] for rel in data}
     for dv_rel, covered_abs in coverage.items():

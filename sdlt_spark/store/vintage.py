@@ -19,8 +19,11 @@ Design (scale notes):
 
 - **Commit log**: ``_vintage_log/{version:08d}.json`` entries list ``add``/
   ``remove`` file actions (paths relative to the table root) plus operation
-  metadata. A snapshot at version v is the file set after replaying entries
-  0..v — identical in spirit to Delta's log replay. Entries are finalized
+  metadata, and each added data file's zone map (row count, per-column
+  min/max/null count) under ``stats``, as Delta's ``add.stats`` does. A
+  snapshot at version v is the file set after replaying entries 0..v —
+  identical in spirit to Delta's log replay; checkpoints keep the zone
+  maps of their live files. Entries are finalized
   with an atomic CAS publish (``os.link`` EEXIST; object stores swap in a
   conditional PUT) so exactly one writer wins each version number, and
   mutations retry against the new snapshot on conflict (``_retry_conflicts``)
@@ -105,7 +108,7 @@ def _retry_conflicts(fn):
     @functools.wraps(fn)
     def wrapper(self, *args, **kwargs):
         for attempt in range(_COMMIT_RETRIES):
-            self._op_files = []
+            self._op_files = {}
             try:
                 return fn(self, *args, **kwargs)
             except BaseException as exc:
@@ -280,8 +283,9 @@ def resolve_commit_changes(
 
 def _read_footer_stats(abs_path: str) -> dict:
     """Zone map for one parquet file from its footer (metadata-only read).
-    Module-level so executors can run it by reference when a commit is big
-    enough to fan stats collection out (see ``_collect_stats``).
+    Module-level so executors can run it by reference when a write is big
+    enough to fan the footer reads out (see ``_collect_stats``); the map
+    lands in the commit entry that adds the file.
 
     A column's file-level range is only usable if EVERY row group supplied
     valid min/max — a partial range (some row groups omitted stats for
@@ -347,6 +351,8 @@ class _Commit:
     remove: list[str]
     data_change: bool = True
     schema_json: str | None = None
+    # zone maps of the added data files that have one, keyed by path
+    stats: dict = field(default_factory=dict)
 
     def to_json(self) -> str:
         return json.dumps(
@@ -359,6 +365,7 @@ class _Commit:
                 "remove": self.remove,
                 "dataChange": self.data_change,
                 "schemaJson": self.schema_json,
+                "stats": self.stats,
             }
         )
 
@@ -374,6 +381,7 @@ class _Commit:
             remove=d.get("remove", []),
             data_change=d.get("dataChange", True),
             schema_json=d.get("schemaJson"),
+            stats=d.get("stats", {}),
         )
 
 
@@ -381,11 +389,14 @@ class _Commit:
 class _Snapshot:
     """One resolved table state: its version, its live files (data files
     and deletion-vector sidecars), the schema the log recorded for it, its
-    active CHECK constraints (name -> SQL predicate) and its ``txnId``
-    watermarks: the newest token, and the newest id per app for tokens
-    written as ``'<app>:<id>'``. Scans take their schema from here, so
-    planning one opens no file; writes take their constraints from here,
-    so enforcing them parses no commit older than the last checkpoint."""
+    active CHECK constraints (name -> SQL predicate), its ``txnId``
+    watermarks (the newest token, and the newest id per app for tokens
+    written as ``'<app>:<id>'``) and the zone maps of its live data files
+    (path -> ``_read_footer_stats`` dict; files without one are absent).
+    Scans take their schema from here, so planning one opens no file;
+    writes take their constraints from here, so enforcing them parses no
+    commit older than the last checkpoint; file skipping takes its zone
+    maps from here."""
 
     version: int
     files: list[str]
@@ -393,6 +404,7 @@ class _Snapshot:
     constraints: dict = field(default_factory=dict)
     last_txn: str | None = None
     app_txns: dict = field(default_factory=dict)
+    stats: dict = field(default_factory=dict)
 
     @property
     def schema(self):
@@ -627,9 +639,11 @@ class VintageTable:
         # never re-derive them by diffing. Off by default — it costs one
         # extra O(changed rows) write per mutation.
         self.change_feed = change_feed
-        # data files written by the in-flight mutation attempt; cleaned up
-        # by _retry_conflicts if the attempt fails to commit
-        self._op_files: list[str] = []
+        # files written by the in-flight mutation attempt (path -> zone map;
+        # None for change-data and DV files): _commit records the zone maps
+        # of the ones it adds, _retry_conflicts deletes them all if the
+        # attempt fails to commit
+        self._op_files: dict[str, dict | None] = {}
 
     # ------------------------------------------------------------------ log
 
@@ -651,7 +665,7 @@ class VintageTable:
             return []
         out = []
         for fname in sorted(os.listdir(log_dir)):
-            # commit entries only (8-digit version); skips file_stats.json etc.
+            # commit entries only (8-digit version); skips checkpoints etc.
             if fname.endswith(".json") and fname[:-5].isdigit():
                 v = int(fname[:-5])
                 if v <= after or (up_to is not None and v > up_to):
@@ -714,7 +728,8 @@ class VintageTable:
 
     def checkpoint(self) -> int:
         """Materialize the current snapshot's state (live file set, schema,
-        constraints and txn watermarks) so later reads replay only commits AFTER this version — Delta's
+        constraints, txn watermarks and the live files' zone maps) so later
+        reads replay only commits AFTER this version — Delta's
         ``_last_checkpoint`` mechanism. Written automatically every
         ``_CHECKPOINT_EVERY`` commits; safe to call any time. Returns the
         checkpointed version."""
@@ -727,6 +742,7 @@ class VintageTable:
             "schemaJson": snap.schema_json,
             "constraints": snap.constraints,
             "txn": {"last": snap.last_txn, "apps": snap.app_txns},
+            "stats": snap.stats,
         }
         final = os.path.join(self._log_path(), f"{snap.version:08d}.checkpoint.json")
         tmp = final + f".tmp-{uuid.uuid4().hex}"
@@ -745,9 +761,9 @@ class VintageTable:
         version. Each op takes one snapshot and derives its file list,
         schema and version from it."""
         ckpt = self._load_checkpoint(version=version, timestamp=timestamp)
-        if ckpt is not None and "constraints" not in ckpt:
-            # written before checkpoints carried constraints and txn
-            # watermarks: only a full replay recovers those
+        if ckpt is not None and ("constraints" not in ckpt or "stats" not in ckpt):
+            # written before checkpoints carried constraints, txn
+            # watermarks and zone maps: only a full replay recovers those
             ckpt = None
         commits = self._commits(after=ckpt["version"] if ckpt else -1, up_to=version)
         if not commits and ckpt is None:
@@ -764,9 +780,13 @@ class VintageTable:
         constraints = dict(ckpt["constraints"]) if ckpt else {}
         last_txn = ckpt["txn"]["last"] if ckpt else None
         app_txns = dict(ckpt["txn"]["apps"]) if ckpt else {}
+        stats = dict(ckpt["stats"]) if ckpt else {}
         for c in commits:
             live.difference_update(c.remove)
             live.update(c.add)
+            for f in c.remove:
+                stats.pop(f, None)
+            stats.update(c.stats)
             schema_json = c.schema_json or schema_json
             resolved = c.version
             params = c.operation_parameters or {}
@@ -781,7 +801,7 @@ class VintageTable:
                     app, _, rest = tid.partition(":")
                     app_txns[app] = rest
         return _Snapshot(
-            resolved, sorted(live), schema_json, constraints, last_txn, app_txns
+            resolved, sorted(live), schema_json, constraints, last_txn, app_txns, stats
         )
 
     def _live_files(self, version: int | None = None, timestamp: float | None = None) -> list[str]:
@@ -803,6 +823,7 @@ class VintageTable:
         data_change: bool = True,
         schema_json: str | None = None,
         read_version: int | None = None,
+        stats: dict | None = None,
     ) -> int:
         """Publish one commit entry. An op that read the table passes the
         version of the snapshot it read as ``read_version`` and publishes at
@@ -810,7 +831,11 @@ class VintageTable:
         ``CommitConflictError`` (and ``_retry_conflicts`` re-derives the op)
         whenever another commit landed since that snapshot. Without it —
         creating a table, or a blind append, which reads no rows — the
-        entry publishes at the head, as Delta's blind appends do."""
+        entry publishes at the head, as Delta's blind appends do.
+
+        The entry carries the zone maps of the added files this attempt
+        wrote (``_op_files``) plus ``stats``, the maps of files it re-adds
+        from elsewhere (restore, clone, import)."""
         tid = (params or {}).get("txnId")
         if tid is not None and str(tid).count(":") > 1:
             # the app-scoped watermark contract encodes '<app>:<version>';
@@ -824,6 +849,8 @@ class VintageTable:
                 "(see last_txn_id)"
             )
         version = self._next_version() if read_version is None else read_version + 1
+        zones = dict(stats or {})
+        zones.update((f, self._op_files[f]) for f in add if self._op_files.get(f) is not None)
         entry = _Commit(
             version=version,
             timestamp=time.time(),
@@ -833,6 +860,7 @@ class VintageTable:
             remove=remove,
             data_change=data_change,
             schema_json=schema_json,
+            stats=zones,
         )
         log_dir = self._log_path()
         os.makedirs(log_dir, exist_ok=True)
@@ -841,12 +869,18 @@ class VintageTable:
         with open(tmp, "w") as f:
             f.write(entry.to_json())
         # CAS publish: exactly one writer wins each version number
-        self._publish(tmp, final)
+        try:
+            self._publish(tmp, final)
+        except BaseException:
+            # a publisher that failed may leave its input behind
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
         # The commit is durable from here: the published entry references
         # this attempt's files, so failure-cleanup must never touch them —
         # a post-publish exception (e.g. checkpoint IO) would otherwise
         # delete data a committed version points at.
-        self._op_files = []
+        self._op_files = {}
         if version > 0 and version % _CHECKPOINT_EVERY == 0:
             try:
                 self.checkpoint()
@@ -885,12 +919,12 @@ class VintageTable:
         # Empty partitions produce zero-row part files — drop them at the
         # source (small-file hygiene, and delete() needs no extra isEmpty
         # job: a delete-everything rewrite simply adds no files).
-        keep = []
+        keep = {}
         for f in files:
-            if stats.get(f, {}).get("rows", 1) == 0:
+            if stats[f]["rows"] == 0:
                 os.remove(os.path.join(self.path, f))
             else:
-                keep.append(f)
+                keep[f] = stats[f]
         if not keep:
             # an all-empty write (e.g. a delete that emptied every touched
             # file) leaves only _SUCCESS markers: no commit references the
@@ -898,22 +932,14 @@ class VintageTable:
             import shutil
 
             shutil.rmtree(abs_dir, ignore_errors=True)
-            stats2 = self._file_stats()
-            if any(f in stats2 for f in files):
-                for f in files:
-                    stats2.pop(f, None)
-                tmp = self._stats_path() + f".tmp-{uuid.uuid4().hex}"
-                with open(tmp, "w") as fh:
-                    json.dump(stats2, fh)
-                os.rename(tmp, self._stats_path())
-        self._op_files.extend(keep)
-        return keep
+        self._op_files.update(keep)
+        return list(keep)
 
     def _cleanup_op_files(self) -> None:
         """Delete data files written by a mutation attempt that failed to
-        commit (no log entry references them), plus their stats entries and
-        now-empty commit directories."""
-        files, self._op_files = self._op_files, []
+        commit (no log entry references them), plus their now-empty commit
+        directories."""
+        files, self._op_files = list(self._op_files), {}
         if not files:
             return
         import shutil
@@ -927,14 +953,6 @@ class VintageTable:
         # so the whole dir goes (rmdir alone would trip on _SUCCESS markers)
         for d in {os.path.dirname(f) for f in files}:
             shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-        stats = self._file_stats()
-        if any(f in stats for f in files):
-            for f in files:
-                stats.pop(f, None)
-            tmp = self._stats_path() + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(stats, fh)
-            os.rename(tmp, self._stats_path())
 
     def _write_change_data(self, changes: DataFrame | None) -> str | None:
         """Persist a mutation's change rows (must carry ``_change_type``)
@@ -951,7 +969,7 @@ class VintageTable:
         files = [
             f"{rel_dir}/{f}" for f in sorted(os.listdir(abs_dir)) if f.endswith(".parquet")
         ]
-        self._op_files.extend(files)
+        self._op_files.update(dict.fromkeys(files))
         if not files:
             # a zero-partition change frame wrote no part files: there is
             # no change data to point CDC readers at
@@ -977,7 +995,7 @@ class VintageTable:
         Crash safety is unchanged: the commit's atomicity point is the
         log publish in ``_commit``, which the caller reaches only after
         BOTH writes returned, so both file sets are durable — and tracked
-        in ``_op_files`` for failure cleanup (list.extend is atomic under
+        in ``_op_files`` for failure cleanup (dict.update is atomic under
         the GIL) — before any reader can learn of them. An exception from
         either write propagates only after the other has finished, so
         ``_retry_conflicts``' cleanup never races a live write.
@@ -996,9 +1014,6 @@ class VintageTable:
         )
         return add, fut.result()
 
-    def _stats_path(self) -> str:
-        return os.path.join(self.path, _LOG_DIR, "file_stats.json")
-
     # Below this many new files, footer reads happen in a driver loop: a
     # local/shared-FS footer read is ~1-50 ms, so a handful of serial reads
     # beats one Spark job's scheduling overhead. Above it, footers are read
@@ -1013,39 +1028,22 @@ class VintageTable:
     _Z_DICT_MAX = 1024
 
     def _collect_stats(self, files: list[str]) -> dict:
-        """Record per-file zone maps (row count + per-column min/max) from
-        the parquet footers — metadata-only reads, the same stats Delta
-        keeps in its log. Used for file skipping. Returns the full stats
-        map. Large commits fan the footer reads out to executors (see
+        """Zone maps (row count + per-column min/max) of the new ``files``,
+        path -> map, from the parquet footers — metadata-only reads. The
+        commit that adds the files records them, as Delta's ``add.stats``
+        does. Large writes fan the footer reads out to executors (see
         ``_DRIVER_STATS_MAX``); a 100 TB write's stats collection is then
         bounded by cluster parallelism, not driver round-trips."""
-        stats = self._file_stats()
         if len(files) > self._DRIVER_STATS_MAX:
             sc = self.spark.sparkContext
             root = self.path
             n_parts = max(1, min(len(files) // 8 + 1, sc.defaultParallelism * 4))
-            pairs = (
+            return dict(
                 sc.parallelize(files, n_parts)
                 .map(lambda rel: (rel, _read_footer_stats(os.path.join(root, rel))))
                 .collect()
             )
-            stats.update(dict(pairs))
-        else:
-            for rel in files:
-                stats[rel] = _read_footer_stats(os.path.join(self.path, rel))
-        tmp = self._stats_path() + f".tmp-{uuid.uuid4().hex}"
-        os.makedirs(os.path.dirname(tmp), exist_ok=True)
-        with open(tmp, "w") as f:
-            json.dump(stats, f)
-        os.rename(tmp, self._stats_path())
-        return stats
-
-    def _file_stats(self) -> dict:
-        try:
-            with open(self._stats_path()) as f:
-                return json.load(f)
-        except (FileNotFoundError, json.JSONDecodeError):
-            return {}
+        return {rel: _read_footer_stats(os.path.join(self.path, rel)) for rel in files}
 
     # --------------------------------------------- per-file constant columns
 
@@ -1118,15 +1116,19 @@ class VintageTable:
             df = df.withColumn(c, F.coalesce(F.col(c), F.col(f"__fp_{c}")))
         return df.drop("__fp_path", *[f"__fp_{c}" for c in cols])
 
-    def _prune_by_range(self, files: list[str], col: str, lo, hi) -> list[str]:
-        """Keep only files whose [min, max] zone for ``col`` overlaps
-        [lo, hi] (either bound ``None`` = unbounded on that side); files
-        without stats are always kept (over-approximation preserves
+    def _prune_by_range(
+        self, snap: _Snapshot, col: str, lo, hi, files: list[str] | None = None
+    ) -> list[str]:
+        """Keep only the data files of ``snap`` — or its files ``files`` —
+        whose [min, max] zone for ``col`` overlaps [lo, hi] (either bound
+        ``None`` = unbounded on that side), by the snapshot's zone maps;
+        files without stats are always kept (over-approximation preserves
         correctness)."""
-        stats = self._file_stats()
+        if files is None:
+            files, _ = self._split_live(snap.files)
         out = []
         for f in files:
-            st = stats.get(f)
+            st = snap.stats.get(f)
             if not st or col not in st.get("min", {}) or col not in st.get("max", {}):
                 out.append(f)
                 continue
@@ -1318,7 +1320,7 @@ class VintageTable:
                 os.remove(os.path.join(abs_dir, f))  # no-match delete
             else:
                 files.append(f"{rel_dir}/{f}")
-        self._op_files.extend(files)
+        self._op_files.update(dict.fromkeys(files))
         if not files:
             shutil.rmtree(abs_dir, ignore_errors=True)
         return files
@@ -1393,6 +1395,7 @@ class VintageTable:
             else []  # DVs referencing no live file (e.g. all-empty) just retire
         )
         remove = covered + dvs
+        zones = {f: self._op_files[f] for f in add}
         version = self._commit(
             "WRITE",
             {"mode": "Overwrite", "dataChange": "false", "materializeDeletionVectors": "true"},
@@ -1402,7 +1405,9 @@ class VintageTable:
             read_version=snap.version,
         )
         live = set(snap.files).difference(remove) | set(add)
-        return replace(snap, version=version, files=sorted(live))
+        stats = {f: z for f, z in snap.stats.items() if f in live}
+        stats.update(zones)
+        return replace(snap, version=version, files=sorted(live), stats=stats)
 
     # ---------------------------------------------------------------- reads
 
@@ -1459,8 +1464,7 @@ class VintageTable:
         touches O(matching) files regardless of table size — the property
         that makes point-ish reads on a 100 TB table not be table scans."""
         snap = self._snapshot(version)
-        data, _ = self._split_live(snap.files)
-        df = self._scan(snap, self._prune_by_range(data, col, lo, hi))
+        df = self._scan(snap, self._prune_by_range(snap, col, lo, hi))
         # the bounds as ONE predicate: each filter() call is a Catalyst
         # analysis pass of its own
         c = F.col(col)
@@ -1935,13 +1939,13 @@ class VintageTable:
             candidates = live
             if pinned is not None:
                 if pinned.bounds is not None:
-                    candidates = self._prune_by_range(live, key0, *pinned.bounds)
+                    candidates = self._prune_by_range(snap, key0, *pinned.bounds)
             elif rng["lo"] is not None:
                 lo, hi = rng["lo"], rng["hi"]
                 # a NaN bound (Spark's max when a NaN key is present)
                 # overlaps no zone, so it cannot prune soundly
                 if isinstance(lo, (int, float, str)) and lo == lo and hi == hi:
-                    candidates = self._prune_by_range(live, key0, lo, hi)
+                    candidates = self._prune_by_range(snap, key0, lo, hi)
             # whenNotMatchedBySource: any live file may hold deletable
             # rows, so its side scans ALL live files (key pruning is only
             # sound for the matched side); Catalyst prunes the read to the
@@ -2664,6 +2668,7 @@ class VintageTable:
         return self._commit(
             "RESTORE", {"version": str(version)}, add, remove,
             schema_json=target.schema.json(), read_version=head.version,
+            stats={f: target.stats[f] for f in add if f in target.stats},
         )
 
     def _bootstrap_v0(
@@ -2679,9 +2684,9 @@ class VintageTable:
         """Create THIS (not-yet-existing) table's v0 commit from prepared
         state — the shared scaffolding of shallow :meth:`clone` and
         :func:`~sdlt_spark.store.delta_read.import_delta_to_vintage`:
-        optional translated deletion-vector rows, carried-over zone-map
-        stats, optional per-file constant-column values (a partitioned
-        Delta import's log-carried partitionValues), one commit, and
+        optional translated deletion-vector rows, optional per-file
+        constant-column values (a partitioned Delta import's log-carried
+        partitionValues), one commit carrying the zone-map ``stats``, and
         failure cleanup of the half-written sidecars (the only bytes a
         zero-copy bootstrap ever writes)."""
         if self.exists():
@@ -2689,12 +2694,6 @@ class VintageTable:
         os.makedirs(self._log_path(), exist_ok=True)
         try:
             dv_add = self._write_dv_files(dv_rows) if dv_rows is not None else []
-            if stats:
-                tmp = self._stats_path() + f".tmp-{uuid.uuid4().hex}"
-                os.makedirs(os.path.dirname(tmp), exist_ok=True)
-                with open(tmp, "w") as fh:
-                    json.dump(stats, fh)
-                os.rename(tmp, self._stats_path())
             if partitions:
                 tmp = self._partitions_path() + f".tmp-{uuid.uuid4().hex}"
                 os.makedirs(os.path.dirname(tmp), exist_ok=True)
@@ -2702,7 +2701,8 @@ class VintageTable:
                     json.dump(partitions, fh)
                 os.rename(tmp, self._partitions_path())
             self._commit(
-                operation, params, rel_add + dv_add, [], schema_json=schema_json
+                operation, params, rel_add + dv_add, [], schema_json=schema_json,
+                stats=stats,
             )
         except BaseException:
             self._cleanup_op_files()
@@ -2714,8 +2714,9 @@ class VintageTable:
         O(file-list) driver work however large the table. Mutations on the
         clone are copy-on-write into the clone's own directory; the source
         is never touched (and the clone's vacuum() never deletes shared
-        files it doesn't own — see vacuum). Zone-map stats ride along, so
-        file skipping works on the clone immediately.
+        files it doesn't own — see vacuum). The source snapshot's zone maps
+        ride along in the clone's v0 commit entry, so file skipping works
+        on the clone immediately.
 
         Caveat (same as Delta's shallow clone): the SOURCE table does not
         know its clones exist, so vacuuming or overwriting the source can
@@ -2745,8 +2746,7 @@ class VintageTable:
                 F.col("file").startswith("/"), F.col("file")
             ).otherwise(F.concat(F.lit(root), F.col("file")))
             dv_rows = src_dv.select(abs_ref.alias("file"), "pos")
-        src_stats = self._file_stats()
-        stats = {r: src_stats[f] for f, r in zip(data, rel_add) if f in src_stats}
+        stats = {r: snap.stats[f] for f, r in zip(data, rel_add) if f in snap.stats}
         src_parts = self._file_partitions()
         parts = {r: src_parts[f] for f, r in zip(data, rel_add) if f in src_parts}
         dest._bootstrap_v0(
@@ -2829,15 +2829,6 @@ class VintageTable:
         for root_dir in (_DATA_DIR, _DV_DIR):
             data_root = os.path.join(self.path, root_dir)
             self._sweep_orphans(data_root, referenced, current, cutoff, deleted)
-        if deleted:
-            # keep the zone-map file bounded: dead files need no stats
-            stats = self._file_stats()
-            for f in deleted:
-                stats.pop(f, None)
-            tmp = self._stats_path() + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as fh:
-                json.dump(stats, fh)
-            os.rename(tmp, self._stats_path())
         return sorted(deleted)
 
     def _sweep_orphans(

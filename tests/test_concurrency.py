@@ -98,7 +98,7 @@ def test_failed_write_files_cleaned_up(spark, tmp_path):
     path = str(tmp_path / "t")
     t = _base(spark, path)
     files_before = _data_files(t)
-    stats_before = set(t._file_stats())
+    stats_before = set(t._snapshot().stats)
 
     def boom(tmp, final):
         os.remove(tmp)
@@ -108,7 +108,7 @@ def test_failed_write_files_cleaned_up(spark, tmp_path):
     with pytest.raises(RuntimeError, match="publish exploded"):
         broken.delete("k < 10")
     assert _data_files(t) == files_before
-    assert set(t._file_stats()) == stats_before
+    assert set(t._snapshot().stats) == stats_before
 
 
 def test_vacuum_sweeps_orphaned_files(spark, tmp_path):

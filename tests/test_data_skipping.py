@@ -21,7 +21,7 @@ def _build(spark, path, n_files=8, rows=4000):
 
 def test_stats_recorded(spark, tmp_path):
     t = _build(spark, str(tmp_path / "t"))
-    stats = t._file_stats()
+    stats = t._snapshot().stats
     assert len(stats) == len(t._live_files())
     for st in stats.values():
         assert st["rows"] > 0
@@ -50,8 +50,13 @@ def test_prune_keeps_files_without_stats(spark, tmp_path):
     # simulate missing stats (e.g. older commits): pruning must keep the file
     import json, os
 
-    with open(t._stats_path(), "w") as f:
-        json.dump({}, f)
+    entry = os.path.join(t._log_path(), "00000000.json")
+    with open(entry) as f:
+        d = json.load(f)
+    del d["stats"]
+    with open(entry, "w") as f:
+        json.dump(d, f)
+    assert not t._checkpoint_versions() and not t._snapshot().stats
     src = spark.range(5).select(F.col("id").alias("k"), F.lit(0.0).alias("v"))
     t.merge(src, ["k"])
     assert t.read().count() == 100
@@ -88,8 +93,8 @@ def test_zorder_compact_prunes_both_columns(spark, tmp_path):
 
     live = t._live_files()
     assert len(live) == 16
-    pruned_x = t._prune_by_range(live, "x", 0, 3)
-    pruned_y = t._prune_by_range(live, "y", 0, 3)
+    pruned_x = t._prune_by_range(t._snapshot(), "x", 0, 3)
+    pruned_y = t._prune_by_range(t._snapshot(), "y", 0, 3)
     # a 4/64 slice of either dimension must skip most of the 16 files
     assert len(pruned_x) <= len(live) // 2, (len(pruned_x), len(live))
     assert len(pruned_y) <= len(live) // 2, (len(pruned_y), len(live))
@@ -113,7 +118,7 @@ def test_executor_side_stats_for_large_commits(spark, tmp_path):
     pruning still works."""
     t = _build(spark, str(tmp_path / "t"), n_files=40, rows=4000)
     assert len(t._live_files()) > VintageTable._DRIVER_STATS_MAX
-    stats = t._file_stats()
+    stats = t._snapshot().stats
     assert len(stats) == len(t._live_files())
     for st in stats.values():
         assert st["rows"] > 0 and "k" in st["min"] and "k" in st["max"]
@@ -144,8 +149,8 @@ def test_zorder_string_column_prunes(spark, tmp_path):
     t.compact(num_files=16, zorder_by=["status", "k"])
     live = t._live_files()
     assert len(live) == 16
-    pruned_s = t._prune_by_range(live, "status", "a", "b")  # 2/16 of the dict
-    pruned_k = t._prune_by_range(live, "k", 0, 15)  # 16/256 of the range
+    pruned_s = t._prune_by_range(t._snapshot(), "status", "a", "b")  # 2/16 of the dict
+    pruned_k = t._prune_by_range(t._snapshot(), "k", 0, 15)  # 16/256 of the range
     assert len(pruned_s) <= len(live) // 2, (len(pruned_s), len(live))
     assert len(pruned_k) <= len(live) // 2, (len(pruned_k), len(live))
     assert t.read().count() == n * n
@@ -168,7 +173,7 @@ def test_write_cluster_by_prunes_at_ingest(spark, tmp_path):
 
     live = t._live_files()
     assert len(live) == 16
-    pruned = t._prune_by_range(live, "k", 0, n // 16)
+    pruned = t._prune_by_range(t._snapshot(), "k", 0, n // 16)
     assert len(pruned) <= 2, (len(pruned), len(live))
     assert t.read().count() == n
     assert t.read().agg(F.sum("v")).head()[0] == n * (n - 1)

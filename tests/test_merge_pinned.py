@@ -69,7 +69,7 @@ def _outcome(spark, tmp_path, pinned, src_rows, keys=("k",), schema=SCHEMA,
         except Exception as exc:  # noqa: BLE001 — the error is the outcome
             return ("error", type(exc).__name__, str(exc))
     entry = t._commits(after=v - 1)[0]
-    stats = t._file_stats()
+    stats = t._snapshot().stats
     table = sorted(repr(tuple(r)) for r in t.read().collect())
     out = {
         "table": table,
@@ -286,3 +286,13 @@ def test_date_keys_join_against_the_pinned_frame(spark, tmp_path):
     out = _same_both_ways(spark, tmp_path, src_rows=src, keys=("d",), schema=schema, base=base)
     assert out["removed"] == 1 and len(out["table"]) == 31
     assert sum(r.endswith((", -2)", ", -90)")) for r in out["table"]) == 2
+
+
+def test_compact_and_read_where_job_counts(spark, tmp_path):
+    t = VintageTable(spark, str(tmp_path / "t"))
+    t.write(_base(spark, 400), cluster_by=["k"], num_files=8)
+    _, jobs = _jobs_in(spark, lambda: t.compact(num_files=2))
+    assert len(jobs) == 2  # the repartition shuffle, the write
+    rows, jobs = _jobs_in(spark, lambda: t.read_where("k", 10, 20).collect())
+    assert len(rows) == 11
+    assert len(jobs) == 1

@@ -180,10 +180,11 @@ def test_ivf_persisted_index_prunes_and_matches(spark, tmp_path):
     # pruning: the probed file set is strictly smaller than the index
     live = t._live_files()
     assert len(live) >= 2
+    snap = t._snapshot()
     probe_files = {
-        f for c in range(16) for f in t._prune_by_range(live, "__cell", c, c)
+        f for c in range(16) for f in t._prune_by_range(snap, "__cell", c, c)
     }
-    one_cell = t._prune_by_range(live, "__cell", 0, 0)
+    one_cell = t._prune_by_range(snap, "__cell", 0, 0)
     assert len(one_cell) < len(live)
 
 

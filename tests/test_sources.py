@@ -228,7 +228,7 @@ def test_vintage_batch_source_filter_pushdown_prunes_files(spark, tmp_path):
     )
     # sabotage: remove the file holding the TOP of the k range
     live = t._live_files()
-    stats = t._file_stats()
+    stats = t._snapshot().stats
     top = max(live, key=lambda f: stats[f]["max"]["k"])
     _os.remove(_os.path.join(path, top))
     lo_cut = stats[top]["min"]["k"]  # anything below this is in other files
