@@ -10,8 +10,13 @@ side, alternating which side goes first, so host drift lands on both
 sides alike. For every metric the script prints both medians, the base
 side's interquartile range, how many pairs the change won (by the
 metric's direction in the base checkout's ``BENCHMARK.json``) and whether
-the gap between the medians exceeds the base IQR. Nothing in the
-checkouts' ``perfbench/`` or ``BENCHMARK.json`` is modified.
+the gap between the medians exceeds the base IQR. For each end-to-end
+metric it also prints the no-regression check: how far the change's
+median moved toward worse, as a fraction of the base median, against the
+metric's ``bound``; ``unresolved`` when the base IQR (as a fraction of the
+base median) exceeds the bound, unless every change run beats every base
+run. Nothing in the checkouts' ``perfbench/`` or ``BENCHMARK.json`` is
+modified.
 """
 
 from __future__ import annotations
@@ -53,13 +58,31 @@ def run_once(cwd: str, args, seed: int) -> dict:
     return json.loads(lines[-1])
 
 
-def directions(checkout_dir: str) -> dict[str, str]:
+def spec_of(checkout_dir: str) -> dict[str, dict]:
+    """Each metric's entry in the checkout's ``BENCHMARK.json`` (its
+    direction, and its ``bound`` for end-to-end metrics), by name."""
     with open(os.path.join(checkout_dir, "BENCHMARK.json")) as f:
         spec = json.load(f)
-    return {m["name"]: m["better"] for m in spec["end_to_end"] + spec["per_layer"]}
+    return {m["name"]: m for m in spec["end_to_end"] + spec["per_layer"]}
 
 
-def summarize(pairs: list[tuple[dict, dict]], better: dict[str, str]) -> list[dict]:
+def verdict(base: list[float], change: list[float], lower: bool, bound: float) -> tuple[float, str]:
+    """The no-regression rule for one end-to-end metric: the median's move
+    toward worse as a fraction of the base median, and ``ok``,
+    ``regressed`` (past ``bound``) or ``unresolved`` (the base IQR alone
+    spans more than ``bound``, and the change runs do not all beat the
+    base runs)."""
+    mb = statistics.median(base)
+    moved = statistics.median(change) - mb
+    worse = (moved if lower else -moved) / abs(mb) if mb else 0.0
+    q1, _, q3 = statistics.quantiles(base, n=4) if len(base) > 1 else (base[0],) * 3
+    all_beat = max(change) < min(base) if lower else min(change) > max(base)
+    if mb and (q3 - q1) / abs(mb) > bound and not all_beat:
+        return worse, "unresolved"
+    return worse, "regressed" if worse > bound else "ok"
+
+
+def summarize(pairs: list[tuple[dict, dict]], spec: dict[str, dict]) -> list[dict]:
     rows = []
     names = sorted(set().union(*(set(b["metrics"]) for b, _ in pairs)))
     for name in names:
@@ -72,7 +95,7 @@ def summarize(pairs: list[tuple[dict, dict]], better: dict[str, str]) -> list[di
             continue
         base = [b for b, _ in got]
         change = [c for _, c in got]
-        lower = better.get(name, "lower") == "lower"
+        lower = spec.get(name, {}).get("better", "lower") == "lower"
         wins = sum((c < b) if lower else (c > b) for b, c in got)
         q1, _, q3 = statistics.quantiles(base, n=4) if len(base) > 1 else (base[0],) * 3
         mb, mc = statistics.median(base), statistics.median(change)
@@ -82,6 +105,10 @@ def summarize(pairs: list[tuple[dict, dict]], better: dict[str, str]) -> list[di
             "change_wins": wins, "pairs": len(got),
             "gap_exceeds_base_iqr": ((mb - mc) if lower else (mc - mb)) > (q3 - q1),
         })
+        if "bound" in spec.get(name, {}):
+            bound = spec[name]["bound"]
+            rows[-1]["worse_frac"], rows[-1]["check"] = verdict(base, change, lower, bound)
+            rows[-1]["bound"] = bound
     return rows
 
 
@@ -120,16 +147,22 @@ def main(argv=None) -> int:
                 ),
                 flush=True,
             )
-        rows = summarize(pairs, directions(sides["base"]))
+        rows = summarize(pairs, spec_of(sides["base"]))
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
-    print(f"{'metric':38} {'base':>12} {'change':>12} {'base IQR':>10} {'wins':>6}  gap>IQR")
+    print(
+        f"{'metric':38} {'base':>12} {'change':>12} {'base IQR':>10} {'wins':>6}  gap>IQR"
+        "  worse/bound  check"
+    )
     for r in rows:
+        bounded = (
+            f"  {r['worse_frac']:+6.1%}/{r['bound']:<4.0%} {r['check']}" if "check" in r else ""
+        )
         print(
             f"{r['metric']:38} {r['base_median']:12.4g} {r['change_median']:12.4g} "
             f"{r['base_iqr']:10.3g} {r['change_wins']:>3}/{r['pairs']:<2}  "
-            f"{'yes' if r['gap_exceeds_base_iqr'] else 'no'}"
+            f"{'yes' if r['gap_exceeds_base_iqr'] else 'no ':7}" + bounded
         )
     if args.out:
         dump(args.out, {"shas": shas, "args": vars(args), "runs": pairs, "summary": rows})

@@ -812,11 +812,12 @@ def vintage_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def vintage_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M3 through the MERGE-ON-READ path: delete(mode='dv') records matched
-    row positions as a deletion-vector sidecar (store/vintage.py::_delete_dv,
-    Delta's deletion vectors) — zero data files rewritten — and read()
-    applies it as an anti-join. Same relational answer as vintage_delete by
-    construction; the oracle is shared. The point-delete shape for 100 TB
-    tables where copy-on-write would rewrite a 128 MB file per row."""
+    row positions as a deletion-vector sidecar
+    (store/vintage.py::_rewrite_rows, Delta's deletion vectors) — zero data
+    files rewritten — and read() applies it as an anti-join. Same
+    relational answer as vintage_delete by construction; the oracle is
+    shared. The point-delete shape for 100 TB tables where copy-on-write
+    would rewrite a 128 MB file per row."""
     t = _fresh_vintage(spark, sf_dir)
     t.delete("o_orderstatus = 'F'", mode="dv")
     return t.read()
@@ -850,7 +851,7 @@ def vintage_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 def vintage_update_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M4 through the MERGE-ON-READ path: update(mode='dv') hides matched
     rows behind a deletion-vector sidecar and appends their updated copies
-    (store/vintage.py::_update_dv, Delta's DV-backed UPDATE) — zero data
+    (store/vintage.py::_rewrite_rows, Delta's DV-backed UPDATE) — zero data
     files rewritten. Same relational answer as vintage_update; shared
     oracle. The point-update shape for 100 TB tables."""
     t = _fresh_vintage(spark, sf_dir)

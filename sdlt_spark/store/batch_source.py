@@ -22,7 +22,8 @@ Read path:
   parquet via pyarrow into Arrow RecordBatches padded/cast to the snapshot
   schema (schema-evolved tables read uniformly);
 - live deletion vectors are applied per file on the executor (position
-  mask over ``_delete_dv`` sidecars) — reads match ``VintageTable.read``
+  mask over the deletion-vector sidecars ``delete``/``update(mode='dv')``
+  write) — reads match ``VintageTable.read``
   exactly even mid-DV;
 - ``pushFilters`` (Spark 4.1) turns top-level comparison predicates into
   zone-map FILE SKIPPING: a selective range on a clustered column reads

@@ -1308,9 +1308,9 @@ class VintageTable:
 
         rel_dir = f"{_DV_DIR}/c{uuid.uuid4().hex}"
         abs_dir = os.path.join(self.path, rel_dir)
-        # one sidecar per delete (Delta's shape): DV row counts are the
-        # op's matched rows — small next to the table — and a single file
-        # keeps the read-path dv listing O(delete ops)
+        # one sidecar per row-level op (Delta's shape): DV row counts are
+        # the op's matched rows — small next to the table — and a single
+        # file keeps the read-path dv listing O(row-level ops)
         dv_rows.coalesce(1).write.mode("errorifexists").parquet(abs_dir)
         files = []
         for f in sorted(os.listdir(abs_dir)):
@@ -1324,44 +1324,6 @@ class VintageTable:
         if not files:
             shutil.rmtree(abs_dir, ignore_errors=True)
         return files
-
-    def _delete_dv(self, condition: str) -> int:
-        """Merge-on-read delete: record matched row positions as a
-        deletion-vector sidecar instead of rewriting data files — Delta's
-        deletion-vector write path. O(matched rows) written, zero data
-        files touched; readers apply the DV as an anti-join until a
-        mutation or compact() materializes it."""
-        snap = self._snapshot()
-        data, dvs = self._split_live(snap.files)
-        cond = F.expr(condition)
-        if not data:
-            return self._commit(
-                "DELETE", {"predicate": condition, "deletionVectors": "true"}, [], [],
-                read_version=snap.version,
-            )
-        # already-deleted rows are excluded first, so re-deleting is a no-op
-        rows = self._drop_dv_rows(
-            self._with_dv_key(self._read_files(data, snap.schema)), dvs
-        )
-        matched = rows.filter(cond)
-        if self.change_feed:
-            matched = matched.localCheckpoint(eager=False)
-        add = self._write_dv_files(
-            matched.select(
-                F.col("__dv_file").alias("file"), F.col("__dv_pos").alias("pos")
-            )
-        )
-        change_dir = self._write_change_data(
-            matched.drop("__dv_file", "__dv_pos").withColumn(
-                "_change_type", F.lit("delete")
-            )
-            if self.change_feed
-            else None
-        )
-        params = {"predicate": condition, "deletionVectors": "true"}
-        if change_dir:
-            params["changeData"] = change_dir
-        return self._commit("DELETE", params, add, [], read_version=snap.version)
 
     @_retry_conflicts
     def materialize_deletion_vectors(self) -> int | None:
@@ -1686,8 +1648,8 @@ class VintageTable:
         # stage the incoming rows, then validate from the staged files —
         # Delta raises when a row falls outside the replaced region
         add_new = self._write_files(df, snap)
-        if add_new:
-            staged = self._read_files(add_new, schema)
+        staged = self._read_files(add_new, schema) if add_new else None
+        if staged is not None:
             n_bad = staged.filter(~F.coalesce(cond, F.lit(False))).count()
             if n_bad:
                 raise ValueError(
@@ -1695,33 +1657,7 @@ class VintageTable:
                     f"the predicate {predicate!r}; writing them would "
                     "corrupt rows outside the replaced region"
                 )
-        touched = self._files_matching(snap, cond)
-        add_kept: list[str] = []
-        change_dir = None
-        if touched:
-            rows = self._read_files(touched, schema)
-            survivors = rows.filter(~F.coalesce(cond, F.lit(False)))
-            if self.change_feed:
-                change_dir = self._write_change_data(
-                    rows.filter(cond)
-                    .withColumn("_change_type", F.lit("delete"))
-                    .unionByName(
-                        self._read_files(add_new, schema).withColumn(
-                            "_change_type", F.lit("insert")
-                        )
-                    )
-                    if add_new
-                    else rows.filter(cond).withColumn(
-                        "_change_type", F.lit("delete")
-                    )
-                )
-            add_kept = self._write_files(survivors, snap)
-        elif self.change_feed and add_new:
-            change_dir = self._write_change_data(
-                self._read_files(add_new, schema).withColumn(
-                    "_change_type", F.lit("insert")
-                )
-            )
+        add_kept, touched, change_dir = self._rewrite_rows(snap, cond, inserted=staged)
         params = {"mode": "Overwrite", "predicate": predicate}
         if txn_id is not None:
             params["txnId"] = str(txn_id)
@@ -2255,6 +2191,112 @@ class VintageTable:
             read_version=snap.version if snap else None,
         )
 
+    def _rewrite_rows(
+        self,
+        snap: _Snapshot,
+        cond,
+        assignments: dict | None = None,
+        dv: bool = False,
+        inserted: DataFrame | None = None,
+    ) -> tuple[list[str], list[str], str | None]:
+        """The one row-level rewrite behind ``delete``, ``update`` and
+        ``replace_where`` (Delta's DELETE/UPDATE rule); returns the
+        commit's ``(add, remove, change_dir)``.
+
+        - The rows of ``snap`` where ``cond`` is true leave their file.
+          Copy-on-write rewrites the files holding one and keeps the rows
+          where ``cond`` is false **or NULL** (SQL DELETE removes only
+          rows where it is true); ``snap`` carries no DVs, callers fold
+          them first. ``dv`` writes their positions to one deletion-vector
+          sidecar and rewrites nothing: O(matched rows) written.
+        - Their updated copies (``assignments``, cast to the column types
+          by :func:`_conform_assignments`) land as new rows.
+        - The change feed records the matched rows as ``delete`` and the
+          new rows plus ``inserted`` (rows the caller staged itself) as
+          ``insert``.
+
+        Each assignment is evaluated once: when more than one write reads
+        the matched rows, they are pinned together with their new values
+        first — eagerly for copy-on-write, whose writes overlap (see
+        :meth:`_write_data_and_changes`); in DV mode the sidecar write
+        runs first and alone, and materializes the pin. A nondeterministic
+        condition is still evaluated by each file rewrite and by the
+        matched rows separately."""
+        data, dvs = self._split_live(snap.files)
+        files = data if dv else self._files_matching(snap, cond)
+        if not files:
+            return [], [], self._write_change_data(
+                None if inserted is None else inserted.withColumn("_change_type", F.lit("insert"))
+            )
+        remove = [] if dv else files
+        rows = self._read_files(files, snap.schema)
+        if dv:  # already-deleted rows are excluded, so re-deleting is a no-op
+            rows = self._drop_dv_rows(self._with_dv_key(rows), dvs)
+        assigned = _conform_assignments(rows, assignments, snap.schema.fields)
+        kept = ~F.coalesce(cond, F.lit(False))
+        if not (dv or self.change_feed):
+            # one pass over each rewritten file: nothing else reads the
+            # matched rows, so they never split off
+            return self._write_files(
+                rows.withColumns(
+                    {c: F.when(cond, v).otherwise(F.col(c)) for c, v in assigned.items()}
+                )
+                if assigned
+                else rows.filter(kept),
+                snap,
+            ), remove, None
+        matched = rows.filter(cond)
+        if assigned:
+            matched = matched.withColumns({f"__set_{c}": v for c, v in assigned.items()})
+        if assigned or (dv and self.change_feed):
+            matched = matched.localCheckpoint(eager=not dv)
+        cols = snap.schema.fieldNames()
+        old = matched.select(*cols)
+        new = (
+            matched.select(*[F.col(f"__set_{c}").alias(c) if c in assigned else c for c in cols])
+            if assigned
+            else None
+        )
+        changes = None
+        if self.change_feed:
+            changes = old.withColumn("_change_type", F.lit("delete"))
+            for ins in (new, inserted):
+                if ins is not None:
+                    changes = changes.unionByName(ins.withColumn("_change_type", F.lit("insert")))
+        add = []
+        if dv:
+            add = self._write_dv_files(
+                matched.select(F.col("__dv_file").alias("file"), F.col("__dv_pos").alias("pos"))
+            )
+        else:
+            survivors = rows.filter(kept)
+            new = survivors if new is None else survivors.unionByName(new)
+        if new is None:
+            return add, remove, self._write_change_data(changes)
+        written, change_dir = self._write_data_and_changes(new, changes, snap)
+        return add + written, remove, change_dir
+
+    def _delete_or_update(
+        self, operation: str, condition: str, mode: str, assignments: dict | None = None
+    ) -> int:
+        """``delete``/``update`` in ``mode``: one :meth:`_rewrite_rows` on
+        the head snapshot, committed as ``operation``."""
+        if mode not in ("copy_on_write", "dv"):
+            raise ValueError(f"mode={mode!r}; expected 'copy_on_write' or 'dv'")
+        dv = mode == "dv"
+        # the copy-on-write rewrite reasons about raw file contents, so
+        # outstanding DVs fold in first (commit-free when none are live)
+        snap = self._snapshot() if dv else self._fold_dvs(self._snapshot())
+        add, remove, change_dir = self._rewrite_rows(
+            snap, F.expr(condition), assignments, dv=dv
+        )
+        params = {"predicate": condition}
+        if dv:
+            params["deletionVectors"] = "true"
+        if change_dir:
+            params["changeData"] = change_dir
+        return self._commit(operation, params, add, remove, read_version=snap.version)
+
     @_retry_conflicts
     def delete(self, condition: str, mode: str = "copy_on_write") -> int:
         """Logical predicate delete (README.md:281).
@@ -2268,92 +2310,7 @@ class VintageTable:
         deletes on a 100 TB table where copy-on-write would rewrite a
         128 MB file per deleted row. Readers apply DVs automatically;
         compact() or materialize_deletion_vectors() folds them back in."""
-        if mode == "dv":
-            return self._delete_dv(condition)
-        if mode != "copy_on_write":
-            raise ValueError(f"mode={mode!r}; expected 'copy_on_write' or 'dv'")
-        # the file-level rewrite below reasons about raw file contents, so
-        # outstanding DVs must be folded in first (no-op commit-free when
-        # none are live)
-        snap = self._fold_dvs(self._snapshot())
-        cond = F.expr(condition)
-        touched = self._files_matching(snap, cond)
-        if not touched:
-            return self._commit(
-                "DELETE", {"predicate": condition}, [], [], read_version=snap.version
-            )
-        rows = self._read_files(touched, snap.schema)
-        # keep rows where the predicate is FALSE **or NULL** — SQL DELETE
-        # only removes rows where it is true; a bare ~cond would silently
-        # drop NULL-evaluating rows from rewritten files
-        survivors = rows.filter(~F.coalesce(cond, F.lit(False)))
-        # zero-row outputs are dropped inside _write_files; no isEmpty job.
-        # Survivor rewrite + CDC land as concurrent jobs: both sides are
-        # deterministic scans of the same touched files (a nondeterministic
-        # condition was already double-evaluated by the sequential form)
-        add, change_dir = self._write_data_and_changes(
-            survivors,
-            rows.filter(cond).withColumn("_change_type", F.lit("delete"))
-            if self.change_feed
-            else None,
-            snap,
-        )
-        params = {"predicate": condition}
-        if change_dir:
-            params["changeData"] = change_dir
-        return self._commit("DELETE", params, add, touched, read_version=snap.version)
-
-    def _update_dv(self, condition: str, assignments: dict) -> int:
-        """Merge-on-read update: record the matched rows' positions as a
-        deletion-vector sidecar and APPEND their updated copies — Delta's
-        DV-backed UPDATE. O(matched rows) written, zero data files
-        rewritten: the point-update shape for a 100 TB table where
-        copy-on-write would rewrite a 128 MB file per touched row. Readers
-        see the update immediately (DV anti-join hides the old rows, the
-        appended file supplies the new ones)."""
-        snap = self._snapshot()
-        data, dvs = self._split_live(snap.files)
-        cond = F.expr(condition)
-        if not data:
-            return self._commit(
-                "UPDATE", {"predicate": condition, "deletionVectors": "true"}, [], [],
-                read_version=snap.version,
-            )
-        rows = self._drop_dv_rows(
-            self._with_dv_key(self._read_files(data, snap.schema)), dvs
-        )
-        # pin the matched row set BEFORE any write: the DV sidecar and the
-        # appended copies are separate jobs, and a non-deterministic
-        # condition (rand(), current_timestamp()) re-evaluated per job
-        # could hide one row set and append a different one — silent row
-        # loss/duplication. localCheckpoint makes both jobs read the same
-        # materialized rows.
-        matched = rows.filter(cond).localCheckpoint(eager=False)
-        add_dv = self._write_dv_files(
-            matched.select(
-                F.col("__dv_file").alias("file"), F.col("__dv_pos").alias("pos")
-            )
-        )
-        before = matched.drop("__dv_file", "__dv_pos")
-        after = before.withColumns(
-            _conform_assignments(before, assignments, snap.schema.fields)
-        )
-        if self.change_feed:
-            after = after.localCheckpoint(eager=False)
-        add_data = self._write_files(after, snap)
-        change_dir = self._write_change_data(
-            before.withColumn("_change_type", F.lit("delete")).unionByName(
-                after.withColumn("_change_type", F.lit("insert"))
-            )
-            if self.change_feed
-            else None
-        )
-        params = {"predicate": condition, "deletionVectors": "true"}
-        if change_dir:
-            params["changeData"] = change_dir
-        return self._commit(
-            "UPDATE", params, add_dv + add_data, [], read_version=snap.version
-        )
+        return self._delete_or_update("DELETE", condition, mode)
 
     @_retry_conflicts
     def update(
@@ -2366,39 +2323,11 @@ class VintageTable:
         (README.md:290).
 
         ``mode="copy_on_write"`` (default) rewrites only files containing
-        matching rows; ``mode="dv"`` is merge-on-read (see
-        :meth:`_update_dv`): a deletion-vector sidecar hides the old rows
-        and the updated copies are appended — O(matched rows) written."""
-        if mode == "dv":
-            return self._update_dv(condition, assignments)
-        if mode != "copy_on_write":
-            raise ValueError(f"mode={mode!r}; expected 'copy_on_write' or 'dv'")
-        snap = self._fold_dvs(self._snapshot())  # see delete(): raw-file rewrite
-        cond = F.expr(condition)
-        touched = self._files_matching(snap, cond)
-        if not touched:
-            return self._commit(
-                "UPDATE", {"predicate": condition}, [], [], read_version=snap.version
-            )
-        rows = self._read_files(touched, snap.schema)
-        assigned = _conform_assignments(rows, assignments, snap.schema.fields)
-        updated = rows.withColumns(
-            {col: F.when(cond, val).otherwise(F.col(col)) for col, val in assigned.items()}
-        )
-        changes = None
-        if self.change_feed:
-            matching = rows.filter(cond)
-            after = matching.withColumns(assigned)
-            changes = matching.withColumn(
-                "_change_type", F.lit("delete")
-            ).unionByName(after.withColumn("_change_type", F.lit("insert")))
-        # rewrite + CDC as concurrent jobs (both deterministic scans of the
-        # touched files; see delete())
-        add, change_dir = self._write_data_and_changes(updated, changes, snap)
-        params = {"predicate": condition}
-        if change_dir:
-            params["changeData"] = change_dir
-        return self._commit("UPDATE", params, add, touched, read_version=snap.version)
+        matching rows; ``mode="dv"`` is merge-on-read (Delta's DV-backed
+        UPDATE): a deletion-vector sidecar hides the old rows and the
+        updated copies are appended — O(matched rows) written, and readers
+        see the update at once. Both modes run :meth:`_rewrite_rows`."""
+        return self._delete_or_update("UPDATE", condition, mode, assignments)
 
     # ---------------------------------------------------------- maintenance
 

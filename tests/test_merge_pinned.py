@@ -8,6 +8,7 @@ error."""
 from __future__ import annotations
 
 import contextlib
+import time
 import uuid
 
 import pytest
@@ -240,6 +241,25 @@ def test_copy_on_write_delete_and_update_job_counts(spark, tmp_path):
     assert len(jobs) == 3  # touched files (scan + distinct), rewrite
     _, jobs = _jobs_in(spark, lambda: t.update("k = 8", {"v": "v + 1"}))
     assert len(jobs) == 3
+
+
+def test_dv_replace_where_and_as_of_read_job_counts(spark, tmp_path):
+    t = VintageTable(spark, str(tmp_path / "t"))
+    t.write(_base(spark, 400), cluster_by=["k"], num_files=8)
+    v0, ts = t.latest_version(), time.time()
+    src = _local(spark, [(k, -1.0, "rw") for k in range(20, 30)], SCHEMA)
+    _, jobs = _jobs_in(spark, lambda: t.write(src, replace_where="k >= 20 AND k < 30"))
+    # stage the rows (1), validate them (a count, 2), touched files (2), rewrite (1)
+    assert len(jobs) == 6
+    _, jobs = _jobs_in(spark, lambda: t.delete("k = 7", mode="dv"))
+    assert len(jobs) == 1  # the sidecar write, which evaluates the condition
+    _, jobs = _jobs_in(spark, lambda: t.update("k = 8", {"v": "v + 1"}, mode="dv"))
+    # the live DV's broadcast, the sidecar write, the appended copies
+    assert len(jobs) == 3
+    for as_of in ({"version": v0}, {"timestamp": ts}):
+        rows, jobs = _jobs_in(spark, lambda: t.read(**as_of).collect())
+        assert len(rows) == 401
+        assert len(jobs) == 1
 
 
 def test_sources_that_are_not_pinned(spark):

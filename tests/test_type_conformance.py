@@ -113,3 +113,47 @@ def test_a_malformed_value_fails_when_the_write_runs(spark, tmp_path):
         t.update("k = 1", {"v": "'abc'"})
     assert t.latest_version() == head
     assert sorted(map(tuple, t.read().collect())) == [(1, 10), (2, 20)]
+
+
+def _update_outcome(spark, path, mode, assignments):
+    """What one copy of a 3-row table looks like after ``update`` in
+    ``mode``: its rows, or the error (its Spark error class when it has
+    one). Either way the table must still read back with its schema."""
+    import re
+
+    t = VintageTable(spark, path)
+    t.write(spark.createDataFrame(
+        [(k, 10 * k, dt.date(2020, 1, k), dt.datetime(2020, 1, k)) for k in (1, 2, 3)],
+        "k int, v int, d date, at timestamp",
+    ))
+    try:
+        t.update("k >= 2", assignments, mode=mode)
+        out = ("ok",)
+    except Exception as exc:  # noqa: BLE001 — the error is the outcome
+        found = re.search(r"\[([A-Z_]+)[\].]", str(exc))
+        out = ("error", found.group(1) if found else type(exc).__name__)
+    assert t.read().schema.simpleString() == "struct<k:int,v:int,d:date,at:timestamp>"
+    return out + (sorted(map(tuple, t.read().collect())),)
+
+
+@pytest.mark.parametrize(
+    "assignments",
+    [
+        {"v": "v + 1"},
+        {"v": "v * 1.5"},
+        {"v": "CAST(v AS SMALLINT)"},
+        {"v": "v + 3000000000"},
+        {"v": "'42'"},
+        {"d": "'2024-01-01'"},
+        {"at": "'2024-01-01 12:30:00'"},
+        {"v": "d"},
+    ],
+    ids=[
+        "same-type", "widening", "narrowing", "overflowing-bigint",
+        "string-to-int", "string-to-date", "string-to-timestamp", "date-to-int",
+    ],
+)
+def test_update_modes_agree_on_every_assignment_type(spark, tmp_path, assignments):
+    cow = _update_outcome(spark, str(tmp_path / "cow"), "copy_on_write", assignments)
+    dv = _update_outcome(spark, str(tmp_path / "dv"), "dv", assignments)
+    assert cow == dv
