@@ -66,22 +66,6 @@ def spec_of(checkout_dir: str) -> dict[str, dict]:
     return {m["name"]: m for m in spec["end_to_end"] + spec["per_layer"]}
 
 
-def verdict(base: list[float], change: list[float], lower: bool, bound: float) -> tuple[float, str]:
-    """The no-regression rule for one end-to-end metric: the median's move
-    toward worse as a fraction of the base median, and ``ok``,
-    ``regressed`` (past ``bound``) or ``unresolved`` (the base IQR alone
-    spans more than ``bound``, and the change runs do not all beat the
-    base runs)."""
-    mb = statistics.median(base)
-    moved = statistics.median(change) - mb
-    worse = (moved if lower else -moved) / abs(mb) if mb else 0.0
-    q1, _, q3 = statistics.quantiles(base, n=4) if len(base) > 1 else (base[0],) * 3
-    all_beat = max(change) < min(base) if lower else min(change) > max(base)
-    if mb and (q3 - q1) / abs(mb) > bound and not all_beat:
-        return worse, "unresolved"
-    return worse, "regressed" if worse > bound else "ok"
-
-
 def summarize(pairs: list[tuple[dict, dict]], spec: dict[str, dict]) -> list[dict]:
     rows = []
     names = sorted(set().union(*(set(b["metrics"]) for b, _ in pairs)))
@@ -106,9 +90,18 @@ def summarize(pairs: list[tuple[dict, dict]], spec: dict[str, dict]) -> list[dic
             "gap_exceeds_base_iqr": ((mb - mc) if lower else (mc - mb)) > (q3 - q1),
         })
         if "bound" in spec.get(name, {}):
+            # the no-regression rule: the median's move toward worse as a
+            # fraction of the base median, against the metric's bound;
+            # unresolved when the base IQR alone spans more than the bound
+            # and the change runs do not all beat the base runs
             bound = spec[name]["bound"]
-            rows[-1]["worse_frac"], rows[-1]["check"] = verdict(base, change, lower, bound)
-            rows[-1]["bound"] = bound
+            worse = ((mc - mb) if lower else (mb - mc)) / abs(mb) if mb else 0.0
+            all_beat = max(change) < min(base) if lower else min(change) > max(base)
+            if mb and (q3 - q1) / abs(mb) > bound and not all_beat:
+                check = "unresolved"
+            else:
+                check = "regressed" if worse > bound else "ok"
+            rows[-1].update(worse_frac=worse, check=check, bound=bound)
     return rows
 
 

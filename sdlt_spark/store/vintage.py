@@ -2217,13 +2217,16 @@ class VintageTable:
 
         Each assignment is evaluated once: when more than one write reads
         the matched rows, they are pinned together with their new values
-        first — eagerly for copy-on-write, whose writes overlap (see
-        :meth:`_write_data_and_changes`); in DV mode the sidecar write
-        runs first and alone, and materializes the pin. A nondeterministic
-        condition is still evaluated by each file rewrite and by the
-        matched rows separately."""
-        data, dvs = self._split_live(snap.files)
-        files = data if dv else self._files_matching(snap, cond)
+        first. DV mode pins the matched rows; its sidecar write runs first
+        and alone, and materializes the pin. A copy-on-write update with
+        the change feed on pins every row of the rewritten files with its
+        match flag, eagerly, since its writes overlap (see
+        :meth:`_write_data_and_changes`), so even a nondeterministic
+        condition puts each row in the table exactly once. A copy-on-write
+        delete with the change feed on evaluates its condition once for
+        the survivors and once for the ``delete`` rows."""
+        data_files, dvs = self._split_live(snap.files)
+        files = data_files if dv else self._files_matching(snap, cond)
         if not files:
             return [], [], self._write_change_data(
                 None if inserted is None else inserted.withColumn("_change_type", F.lit("insert"))
@@ -2233,47 +2236,55 @@ class VintageTable:
         if dv:  # already-deleted rows are excluded, so re-deleting is a no-op
             rows = self._drop_dv_rows(self._with_dv_key(rows), dvs)
         assigned = _conform_assignments(rows, assignments, snap.schema.fields)
-        kept = ~F.coalesce(cond, F.lit(False))
-        if not (dv or self.change_feed):
-            # one pass over each rewritten file: nothing else reads the
-            # matched rows, so they never split off
-            return self._write_files(
+        cols = snap.schema.fieldNames()
+        new_cols = [F.col(f"__set_{c}").alias(c) if c in assigned else c for c in cols]
+        if dv:
+            matched = rows.filter(cond).withColumns(
+                {f"__set_{c}": v for c, v in assigned.items()}
+            )
+            if assigned or self.change_feed:
+                # the sidecar, the new rows and the change feed all read the
+                # matched rows; the sidecar write runs first and alone, and
+                # materializes the pin
+                matched = matched.localCheckpoint(eager=False)
+            add = self._write_dv_files(
+                matched.select(F.col("__dv_file").alias("file"), F.col("__dv_pos").alias("pos"))
+            )
+            data = matched.select(*new_cols) if assigned else None
+        else:
+            if assigned and self.change_feed:
+                # the table and the change feed both read the updated rows:
+                # pin every row of the rewritten files with its match flag
+                # and new values, so each row lands in the table once and
+                # the feed records the values it got (eager: the two
+                # writes overlap)
+                rows = (
+                    rows.withColumn("__m", F.coalesce(cond, F.lit(False)))
+                    .withColumns(
+                        {f"__set_{c}": F.when(F.col("__m"), v) for c, v in assigned.items()}
+                    )
+                    .localCheckpoint()
+                )
+                cond = F.col("__m")
+                assigned = {c: F.col(f"__set_{c}") for c in assigned}
+            matched = rows.filter(cond)
+            add = []
+            data = (
                 rows.withColumns(
                     {c: F.when(cond, v).otherwise(F.col(c)) for c, v in assigned.items()}
                 )
                 if assigned
-                else rows.filter(kept),
-                snap,
-            ), remove, None
-        matched = rows.filter(cond)
-        if assigned:
-            matched = matched.withColumns({f"__set_{c}": v for c, v in assigned.items()})
-        if assigned or (dv and self.change_feed):
-            matched = matched.localCheckpoint(eager=not dv)
-        cols = snap.schema.fieldNames()
-        old = matched.select(*cols)
-        new = (
-            matched.select(*[F.col(f"__set_{c}").alias(c) if c in assigned else c for c in cols])
-            if assigned
-            else None
-        )
+                else rows.filter(~F.coalesce(cond, F.lit(False)))
+            ).select(*cols)
         changes = None
         if self.change_feed:
-            changes = old.withColumn("_change_type", F.lit("delete"))
-            for ins in (new, inserted):
+            changes = matched.select(*cols).withColumn("_change_type", F.lit("delete"))
+            for ins in (matched.select(*new_cols) if assigned else None, inserted):
                 if ins is not None:
                     changes = changes.unionByName(ins.withColumn("_change_type", F.lit("insert")))
-        add = []
-        if dv:
-            add = self._write_dv_files(
-                matched.select(F.col("__dv_file").alias("file"), F.col("__dv_pos").alias("pos"))
-            )
-        else:
-            survivors = rows.filter(kept)
-            new = survivors if new is None else survivors.unionByName(new)
-        if new is None:
+        if data is None:
             return add, remove, self._write_change_data(changes)
-        written, change_dir = self._write_data_and_changes(new, changes, snap)
+        written, change_dir = self._write_data_and_changes(data, changes, snap)
         return add + written, remove, change_dir
 
     def _delete_or_update(

@@ -390,6 +390,25 @@ def test_update_change_feed_matches_the_table_for_a_nondeterministic_assignment(
     assert inserts == table
 
 
+@pytest.mark.parametrize("mode", ["copy_on_write", "dv"])
+def test_update_with_a_nondeterministic_condition_keeps_every_row_once(
+    spark, tmp_path, mode
+):
+    # the condition is evaluated once per row for the table: no row is
+    # dropped or duplicated, and the change feed names the updated rows
+    t = VintageTable(spark, str(tmp_path / "t"), change_feed=True)
+    t.write(spark.range(40).select(
+        F.col("id").alias("k"), F.col("id").cast("double").alias("v")
+    ).repartition(2))
+    v = t.update("rand() < 0.5", {"v": "v + 100"}, mode=mode)
+    rows = t.read().collect()
+    assert sorted(r["k"] for r in rows) == list(range(40))
+    updated = {r["k"] for r in rows if r["v"] >= 100}
+    changes = t.table_changes(v, v).collect()
+    for kind in ("delete", "insert"):
+        assert {r["k"] for r in changes if r["_change_type"] == kind} == updated
+
+
 def _nullable(spark, path, change_feed):
     t = VintageTable(spark, path, change_feed=change_feed)
     t.write(spark.range(20).select(

@@ -1364,6 +1364,34 @@ def test_import_partitioned_delta_zero_copy(spark, tmp_path):
     assert got == [(1, 0, "v1"), (2, 0, "v2"), (3, 1, "updated"), (4, None, "v4")]
 
 
+@pytest.mark.parametrize("mode", ["copy_on_write", "dv"])
+def test_import_partitioned_delta_update_with_change_feed(spark, tmp_path, mode):
+    """An update of a partitioned import with the change feed on: the
+    rewritten rows carry the re-attached partition column, and the change
+    feed records the old and new rows of exactly the updated key."""
+    from sdlt_spark.store.delta_read import import_delta_to_vintage
+
+    root = str(tmp_path / "dt")
+    _write_part(f"{root}/r=0/a.parquet", [1, 2])
+    _write_part(f"{root}/r=1/b.parquet", [3])
+    w = DeltaLogWriter(root)
+    w.commit(
+        adds=[("r=0/a.parquet", {"r": "0"}), ("r=1/b.parquet", {"r": "1"})],
+        schema_json=_PART_SCHEMA,
+        partition_columns=["r"],
+    )
+    import_delta_to_vintage(spark, root, str(tmp_path / "vt"))
+    t = VintageTable(spark, str(tmp_path / "vt"), change_feed=True)
+    v = t.update("k = 2", {"v": "'updated'"}, mode=mode)
+    got = sorted((x["k"], x["r"], x["v"]) for x in t.read().collect())
+    assert got == [(1, 0, "v1"), (2, 0, "updated"), (3, 1, "v3")]
+    changes = sorted(
+        (x["_change_type"], x["k"], x["r"], x["v"])
+        for x in t.table_changes(v, v).collect()
+    )
+    assert changes == [("delete", 2, 0, "v2"), ("insert", 2, 0, "updated")]
+
+
 def test_import_still_refuses_column_mapped(spark, tmp_path):
     from sdlt_spark.store.delta_read import import_delta_to_vintage
 
